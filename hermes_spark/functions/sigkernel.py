@@ -1,23 +1,25 @@
-"""Arrow/numpy twin of the MinHash signature expression pipeline.
+"""Arrow/numpy MinHash signature kernel behind
+``operators.minhash_signatures``.
 
-Round-9 stage decomposition (``tools/diag_minhash_funnel.py sigdecomp``,
-500k docs, 32 hashes): the expression pipeline's wall is ~97%
-interpreted higher-order lambdas — the ``transform(sequence, substr)``
-shingle generator alone costs 34.6 s against a 1.0 s scan, and the 32
-``array_min(transform(...))`` permutation minima cost several times
-that again.  Base hashing (xxhash64, a JVM intrinsic) adds ~0.5 s —
-the CPU is interpreter overhead, not hashing.  This module computes
-the identical signatures in one Arrow-batched pass: Python slicing for
-shingles (~100 ns/shingle), a vectorized XXH64 over the batch's unique
-shingles, and ``np.minimum.reduceat`` for the permutation minima
-(~1 ns/element instead of ~310 ns interpreted).
+The same signatures as an expression,
+``functions.minhash_signature(shingles(text, n), ...)``, cost ~97%
+interpreted higher-order lambdas (round 9, 500k docs, 32 hashes): the
+``transform(sequence, substr)`` shingle generator alone costs 34.6 s
+against a 1.0 s scan, and the 32 ``array_min(transform(...))``
+permutation minima cost several times that again.  Base hashing
+(xxhash64, a JVM intrinsic) adds ~0.5 s — the CPU is interpreter
+overhead, not hashing.  This module computes the identical signatures
+in one Arrow-batched pass: Python slicing for shingles (~100
+ns/shingle), a vectorized XXH64 over the batch's unique shingles, and
+``np.minimum.reduceat`` for the permutation minima (~1 ns/element
+instead of ~310 ns interpreted).
 
-Bit-identical contract (property-tested against the expression path in
+Bit-identical contract (tested against that public expression in
 ``tests/test_round9.py``):
 
 * shingling: character n-grams; strings with ``len(text) <= n`` yield
   the whole string as the single shingle; ``None`` text yields the
-  expression path's all-null signature.
+  expression's all-null signature.
 * portable base hash: first 8 hex chars of md5(UTF-8) as an integer,
   mod 2^31-1 — byte-for-byte the DuckDB-checkable recipe in
   ``functions/hashing.py``.
@@ -31,7 +33,7 @@ Bit-identical contract (property-tested against the expression path in
 
 Scale design: the kernel is embarrassingly parallel per Arrow batch —
 no state, no shuffle; ``plans.rebalance_for_cpu`` upstream keeps every
-core fed on narrow inputs exactly as for the expression path.
+core fed on narrow inputs.
 """
 
 from __future__ import annotations
@@ -608,8 +610,8 @@ def signatures_for_texts(
     """MinHash signatures for a sequence of texts (one Arrow batch).
 
     Returns a list of per-doc signature lists (``None`` components for
-    ``None`` texts — the expression path's ``array_min(null)`` yields
-    an all-null array, preserved so unions with expression-built
+    ``None`` texts — the expression's ``array_min(null)`` yields an
+    all-null array, preserved so unions with expression-built
     signature stores stay consistent).
 
     Three lanes, merged in input order: ASCII docs longer than the
@@ -622,7 +624,7 @@ def signatures_for_texts(
     multilingual corpora); the rest (short, null, non-ASCII with
     shingle_n > 3) through the dict-interned scalar lane.  Signature
     minima are per-doc, so lane assignment cannot change the result
-    (property-tested against the expression path all three ways).
+    (property-tested against the expression all three ways).
     """
     ascii_i: list = []
     ascii_bufs: list = []

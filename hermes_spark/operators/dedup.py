@@ -26,8 +26,9 @@ Scale design notes (100 TB):
 * ``ngram_jaccard_pairs`` — exact verification; intended for the
   *candidate pairs* produced by LSH (or small within-group spaces), never
   the full corpus.
-* ``simhash`` — 32-bit signature via bit-vote aggregation, pure
-  expressions; near-dup = hamming distance <= k on signature.
+* ``simhash`` — 32-bit signature via a numpy per-bit vote over
+  expression-computed token hashes; near-dup = hamming distance <= k
+  on signature.
 """
 
 from __future__ import annotations
@@ -39,9 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import (
     band_keys,
-    base_hash31,
     fast_hash64,
-    minhash_signature_from_hashes,
     portable_hash64,
     shingles,
 )
@@ -219,50 +218,25 @@ def minhash_signatures(
     num_hashes: int = 16,
     portable: bool = True,
     seed: int = 42,
-    sig_engine: str = "arrow",
 ) -> DataFrame:
     """``(__id, __sig array<bigint>)`` MinHash signatures — the shared
     front half of every MinHash consumer (LSH pairs, signature stores,
     incremental dedup).
 
-    ``sig_engine="arrow"`` (default) computes shingles, base hashes and
-    permutation minima in one Arrow-batched numpy kernel
-    (``functions/sigkernel.py``); ``"expr"`` is the all-JVM Column
-    expression path.  Both are bit-identical (property-tested) — the
-    kernel exists because the round-9 decomposition showed the
-    expression path's wall is ~97% interpreted higher-order lambdas
-    (34.6 s of shingle ``transform`` + several times that in the 32
-    ``array_min`` transforms against a 1.0 s scan at 500k docs; see
-    ``tools/diag_minhash_funnel.py sigdecomp``), not hashing.
+    Shingles, base hashes and permutation minima are computed in one
+    Arrow-batched numpy kernel (``functions/sigkernel.py``).  Its
+    signatures equal the public expression
+    ``functions.minhash_signature(shingles(text, n), ...)`` component
+    for component (tested in ``tests/test_round9.py``); the kernel
+    exists because that expression's wall is ~97% interpreted
+    higher-order lambdas (34.6 s of shingle ``transform`` + several
+    times that in the 32 ``array_min`` transforms against a 1.0 s scan
+    at 500k docs, round 9), not hashing.
 
-    Scale: embarrassingly parallel scan stage either way, zero shuffle;
+    Scale: embarrassingly parallel scan stage, zero shuffle;
     ``plans.rebalance_for_cpu`` upstream keeps cores fed on narrow
-    inputs.  Callers needing streaming frames use ``"expr"`` (Arrow
-    kernels are fine in streaming too, but the expression path keeps
-    the stateful plans inspectable).
+    inputs.
     """
-    if sig_engine == "expr":
-        # two-step projection: base hashes land in their own column so
-        # the md5/xxhash-per-shingle work runs exactly once per document
-        # (Catalyst's CollapseProject keeps projections separate when an
-        # alias is referenced many times by non-cheap expressions)
-        hashed = df.select(
-            F.col(id_col).alias("__id"),
-            F.transform(
-                shingles(F.col(text_col), n=shingle_n),
-                lambda s: base_hash31(s, portable=portable, seed=seed),
-            ).alias("__hs"),
-        )
-        return hashed.select(
-            "__id",
-            minhash_signature_from_hashes(
-                F.col("__hs"), num_hashes, seed=seed
-            ).alias("__sig"),
-        )
-    if sig_engine != "arrow":
-        raise ValueError(
-            f"sig_engine must be 'arrow' or 'expr', got {sig_engine!r}"
-        )
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     from ..functions.sigkernel import signatures_from_arrow
@@ -304,8 +278,6 @@ def minhash_lsh_pairs(
     min_jaccard: float = 0.0,
     portable: bool = True,
     max_bucket_size: int = 1000,
-    pair_engine: str = "arrow",
-    sig_engine: str = "arrow",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash + LSH banding.
 
@@ -313,15 +285,13 @@ def minhash_lsh_pairs(
     ``est_jaccard`` is the fraction of equal signature components (an
     unbiased estimator of shingle-set Jaccard).
 
-    ``pair_engine`` picks how intra-bucket pairs are generated after the
-    one gather shuffle — ``"arrow"`` (default; numpy kernel, ~100×
-    cheaper per pair, pushes ``min_jaccard`` into the kernel) or
-    ``"expr"`` (pure Column expressions).  ``sig_engine`` picks the
-    signature front half the same way (see :func:`minhash_signatures`
-    — the r9 Arrow kernel removes the interpreted shingle/permutation
-    lambdas that were ~97% of the stage wall).  All four combinations
-    produce bit-identical results (property-tested); the expression
-    paths remain as the all-JVM reference implementation.
+    Signatures come from :func:`minhash_signatures`; intra-bucket pairs
+    from the numpy kernel of :func:`_grouped_bucket_pairs_arrow` after
+    one gather shuffle, with ``min_jaccard`` pushed into the kernel.
+    Buckets over ``max_bucket_size`` collapse (identical-signature
+    chains + representative pairs/star, see :func:`_bucket_pairs_np`).
+    ``tests/near_dup_reference.py`` restates these semantics in plain
+    Python and the tests compare the operator against it.
     """
     assert num_hashes % num_bands == 0
     rows_per_band = num_hashes // num_bands
@@ -336,7 +306,7 @@ def minhash_lsh_pairs(
 
     sigs = minhash_signatures(
         df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes,
-        portable=portable, sig_engine=sig_engine,
+        portable=portable,
     )
 
     buckets = sigs.select(
@@ -346,29 +316,19 @@ def minhash_lsh_pairs(
     )
 
     # ONE shuffle: gather each bucket's members, then generate the
-    # intra-bucket pairs in-task (numpy kernel or array expressions, no
-    # self-join).  A self-join here would recompute the shingle+hash
-    # pipeline once per join side (Spark re-executes un-cached branches)
-    # — with this shape the documents are scanned and hashed exactly
-    # once, and est_jaccard is computed before the dedup shuffle so
-    # signature arrays never travel twice.
-    if pair_engine == "arrow":
-        raw = _grouped_bucket_pairs_arrow(
-            buckets,
-            num_hashes,
-            max_bucket_size,
-            id_type=df.schema[id_col].dataType,
-            min_est=min_jaccard if min_jaccard > 0 else None,
-        )
-    elif pair_engine == "expr":
-        grouped = (
-            buckets.groupBy("__band")
-            .agg(F.collect_list(F.struct("__id", "__sig")).alias("__members"))
-            .filter(F.size("__members") >= 2)
-        )
-        raw = _gathered_bucket_pairs(grouped, num_hashes, max_bucket_size)
-    else:
-        raise ValueError(f"pair_engine must be 'arrow' or 'expr', got {pair_engine!r}")
+    # intra-bucket pairs in-task (numpy kernel, no self-join).  A
+    # self-join here would recompute the shingle+hash pipeline once per
+    # join side (Spark re-executes un-cached branches) — with this
+    # shape the documents are scanned and hashed exactly once, and
+    # est_jaccard is computed before the dedup shuffle so signature
+    # arrays never travel twice.
+    raw = _grouped_bucket_pairs_arrow(
+        buckets,
+        num_hashes,
+        max_bucket_size,
+        id_type=df.schema[id_col].dataType,
+        min_est=min_jaccard if min_jaccard > 0 else None,
+    )
     out = (
         raw.select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
         .distinct()
@@ -378,134 +338,40 @@ def minhash_lsh_pairs(
     return out
 
 
-def _pair_est(m1: Column, m2: Column, num_hashes: int) -> Column:
-    """Signature-agreement estimator between two (…__id, __sig…) structs."""
-    return F.size(
-        F.filter(
-            F.zip_with(m1["__sig"], m2["__sig"], lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ) / F.lit(float(num_hashes))
+def _unpack_buckets(ids_la, vals_la):
+    """Flatten one Arrow batch of gathered buckets for a pair kernel.
 
+    ``ids_la`` and ``vals_la`` are the two ``collect_list`` columns of
+    one groupBy: row ``r`` holds bucket ``r``'s member ids and the
+    members' values (signatures, fingerprints).  Returns ``(ids,
+    values, starts)`` — the flat id ndarray, the flat value Array (one
+    list level removed) and (nb + 1,) int64 offsets, so bucket ``r`` is
+    ``[starts[r], starts[r + 1])`` of both.
 
-def _all_pair_structs(arr: Column, num_hashes: int) -> Column:
-    """All intra-array pairs (id_a<id_b, est_jaccard) — in-task, O(k²)."""
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda m1, i: F.transform(
-                F.slice(arr, i + 2, F.size(arr)),
-                lambda m2: F.struct(
-                    F.least(m1["__id"], m2["__id"]).alias("id_a"),
-                    F.greatest(m1["__id"], m2["__id"]).alias("id_b"),
-                    _pair_est(m1, m2, num_hashes).alias("est_jaccard"),
-                ),
-            ),
-        )
-    )
-
-
-def _gathered_bucket_pairs(
-    grouped: DataFrame, num_hashes: int, max_bucket_size: int
-) -> DataFrame:
-    """Candidate pairs from gathered band buckets ``(…, __members:
-    array<struct<__id,__sig>>)`` — NOT distinct, ``est_jaccard`` unrounded.
-
-    Buckets within ``max_bucket_size`` generate all intra-bucket pairs
-    (O(k²) in-task).  Oversized buckets — real corpora DO have
-    boilerplate/templated clusters far larger than any sane cap, and
-    they collide in EVERY band, so dropping the bucket (the pre-round-6
-    behavior) silently yielded zero pairs for exactly the biggest
-    near-dup clusters — are collapsed instead of dropped:
-
-    1. members are sorted by ``(__sig, __id)``; identical-signature runs
-       are chained by ADJACENT pairs (est 1.0 — equal signatures), which
-       connects an n-member identical cluster with n-1 pairs, O(n);
-    2. the distinct-signature representatives (first of each run) go
-       through the normal all-pairs generation when they fit the cap;
-    3. a representative set still over the cap (a genuinely diverse hot
-       bucket) is star-chained to its minimum member with the true
-       signature-agreement estimate — downstream ``min_jaccard`` filters
-       keep only genuine near-dups, so this adds candidates (O(n))
-       rather than dropping them.
-
-    Connectivity, not the full pair list, is what downstream
-    ``connected_components`` / ``fuzzy_dedup_keep_one`` need — the
-    collapse preserves it at O(n) per oversized bucket.
+    Raises ``ValueError`` when a bucket's two lists differ in length:
+    pairing by position would then give ids another member's value.
     """
-    members = F.col("__members")
-    # (__sig, __id)-sorted view, built only for oversized buckets (the
-    # common path pays a cheap restructure, no sort)
-    restruct = F.transform(
-        members, lambda m: F.struct(m["__sig"].alias("__sig"), m["__id"].alias("__id"))
-    )
-    g = grouped.withColumn(
-        "__ssort",
-        F.when(F.size(members) > max_bucket_size, F.array_sort(restruct)).otherwise(
-            F.slice(restruct, 1, 0)
-        ),
-    )
-    ssort = F.col("__ssort")
+    import numpy as np
 
-    def prev(i: Column) -> Column:
-        # element_at is 1-based; greatest() keeps the index legal at
-        # i==0 where the (i > 0) guard discards the value anyway
-        return F.element_at(ssort, F.greatest(i, F.lit(1)))
-
-    chain = F.filter(
-        F.transform(
-            ssort,
-            lambda m, i: F.when(
-                (i > 0) & (prev(i)["__sig"] == m["__sig"]),
-                F.struct(
-                    F.least(prev(i)["__id"], m["__id"]).alias("id_a"),
-                    F.greatest(prev(i)["__id"], m["__id"]).alias("id_b"),
-                    F.lit(1.0).alias("est_jaccard"),
-                ),
-            ),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    g = g.withColumn(
-        "__reps",
-        F.filter(
-            ssort,
-            lambda m, i: F.when(i == 0, F.lit(True)).otherwise(
-                prev(i)["__sig"] != m["__sig"]
-            ),
-        ),
-    )
-    reps = F.col("__reps")
-    rep0 = F.element_at(reps, 1)
-    star = F.transform(
-        F.slice(reps, 2, F.size(reps)),
-        lambda m2: F.struct(
-            F.least(rep0["__id"], m2["__id"]).alias("id_a"),
-            F.greatest(rep0["__id"], m2["__id"]).alias("id_b"),
-            _pair_est(rep0, m2, num_hashes).alias("est_jaccard"),
-        ),
-    )
-    pair_structs = F.when(
-        F.size(members) <= max_bucket_size, _all_pair_structs(members, num_hashes)
-    ).otherwise(
-        F.concat(
-            chain,
-            F.when(
-                F.size(reps) <= max_bucket_size,
-                _all_pair_structs(reps, num_hashes),
-            ).otherwise(star),
+    counts = ids_la.value_lengths().to_numpy(zero_copy_only=False)
+    vcounts = vals_la.value_lengths().to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(counts != vcounts)
+    if len(bad):
+        r = int(bad[0])
+        raise ValueError(
+            f"misaligned bucket lists: bucket {r} has {counts[r]} ids "
+            f"but {vcounts[r]} values"
         )
-    )
-    return g.select(F.explode(pair_structs).alias("__p")).select(
-        "__p.id_a", "__p.id_b", "__p.est_jaccard"
-    )
+    starts = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    ids = ids_la.flatten().to_numpy(zero_copy_only=False)
+    return ids, vals_la.flatten(), starts
 
 
 def _allpairs_np(ids, sig, num_hashes: int, min_est):
     """All intra-bucket pairs, vectorized.  ``ids``: (k,) ndarray,
     ``sig``: (k, H) int64 ndarray.  Returns (id_a, id_b, est) ndarrays
-    with id_a < id_b, est = matches / num_hashes (exact IEEE double,
-    identical to the zip_with expression)."""
+    with id_a < id_b, est = matches / num_hashes."""
     import numpy as np
 
     k = len(ids)
@@ -533,15 +399,36 @@ def _allpairs_np(ids, sig, num_hashes: int, min_est):
 
 
 def _bucket_pairs_np(ids, sig, num_hashes: int, cap: int, min_est):
-    """Numpy twin of one bucket's worth of :func:`_gathered_bucket_pairs`
-    — same pairs, same estimates, same oversized-bucket collapse
-    (identical-signature chaining + representative pairs/star)."""
+    """One LSH bucket's candidate pairs as a list of (id_a, id_b, est)
+    ndarray triples.  ``ids``: (k,) ndarray, ``sig``: (k, H) ndarray.
+
+    A bucket within ``cap`` generates all intra-bucket pairs.  Oversized
+    buckets — real corpora DO have boilerplate/templated clusters far
+    larger than any sane cap, and they collide in EVERY band, so
+    dropping the bucket would yield zero pairs for exactly the biggest
+    near-dup clusters — are collapsed instead of dropped:
+
+    1. members are sorted by (signature, id); identical-signature runs
+       are chained by ADJACENT pairs (est 1.0 — equal signatures), which
+       connects an n-member identical cluster with n-1 pairs, O(n);
+    2. the distinct-signature representatives (first of each run) go
+       through the normal all-pairs generation when they fit the cap;
+    3. a representative set still over the cap (a genuinely diverse hot
+       bucket) is star-chained to its first representative with the
+       true signature-agreement estimate — downstream ``min_jaccard``
+       filters keep only genuine near-dups, so this adds candidates
+       (O(n)) rather than dropping them.
+
+    Connectivity, not the full pair list, is what downstream
+    ``connected_components`` / ``fuzzy_dedup_keep_one`` need — the
+    collapse preserves it at O(n) per oversized bucket.
+    """
     import numpy as np
 
     k = len(ids)
     if k <= cap:
         return [_allpairs_np(ids, sig, num_hashes, min_est)]
-    # (__sig, __id) sort — identical to array_sort over struct(sig, id)
+    # (signature, id) lexicographic sort
     try:
         order = np.lexsort((ids,) + tuple(sig.T[::-1]))
     except TypeError:  # non-numeric ids: fall back to Python tuple sort
@@ -578,22 +465,14 @@ def _grouped_bucket_pairs_arrow(
     min_est: "float | None" = None,
 ) -> DataFrame:
     """Candidate pairs from the banded frame ``(__band, __id, __sig)``
-    via ONE groupBy exchange + an Arrow-batched pair kernel.
+    via ONE groupBy exchange + an Arrow-batched pair kernel — NOT
+    distinct, ``est_jaccard`` unrounded.
 
-    Bit-identical output to the expression path (groupBy collect_list →
-    :func:`_gathered_bucket_pairs`), property-tested against it — but
-    the O(k²) intra-bucket work runs as numpy integer comparisons
-    (~ns/pair) instead of interpreted ``zip_with`` lambdas over the
-    signature (~310 ns/element × num_hashes per pair; see BASELINE.md
-    "Gopher repetition" for the interpreter measurement).  Honest
-    scoreboard (BASELINE.md round 8): on the funnel corpus the two
-    engines TIE — its banded buckets imply only ~204M candidate pairs
-    at 5M docs, so the stage is signature-scan-bound and the r7
-    "superlinear pair generation" wall was actually input-layout
-    starvation (fixed by ``plans.rebalance_for_cpu`` below).  The
-    kernel is kept as insurance for genuinely pair-dense corpora
-    (boilerplate mega-clusters under a high cap), where per-pair cost
-    does dominate.
+    Each gathered bucket goes through :func:`_bucket_pairs_np`: the
+    O(k²) intra-bucket work runs as numpy integer comparisons
+    (~ns/pair), and oversized buckets collapse in O(n).  The reference
+    these pairs are tested against is the plain-Python restatement of
+    the same rules in ``tests/near_dup_reference.py``.
 
     ``min_est`` pushes the caller's own est_jaccard threshold into the
     kernel (with a 1e-6 margin so 6-dp rounding can never flip a
@@ -603,7 +482,7 @@ def _grouped_bucket_pairs_arrow(
     The two collect_lists are aligned: Spark evaluates both aggregate
     buffers over one pass of the group's rows in a single aggregation
     operator, so index i of ``__ids`` and ``__sigs`` come from the same
-    input row (asserted in the kernel).
+    input row (checked per batch by :func:`_unpack_buckets`).
     """
     import numpy as np
 
@@ -638,23 +517,18 @@ def _grouped_bucket_pairs_arrow(
         import pyarrow as pa
 
         for batch in batches:
-            ids_la = batch.column(0)
-            sigs_la = batch.column(1)
-            nb = len(ids_la)
+            nb = batch.num_rows
             if nb == 0:
                 continue
-            counts = ids_la.value_lengths().to_numpy(zero_copy_only=False)
-            counts = counts.astype(np.int64)
-            ids_np = ids_la.flatten().to_numpy(zero_copy_only=False)
+            ids_np, sigs, starts = _unpack_buckets(
+                batch.column(0), batch.column(1)
+            )
             sig_flat = (
-                sigs_la.flatten()
-                .flatten()
+                sigs.flatten()
                 .to_numpy(zero_copy_only=False)
                 .reshape(-1, num_hashes)
                 .astype(np.int32, copy=False)
             )
-            starts = np.zeros(nb + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
             parts_a, parts_b, parts_e = [], [], []
             for r in range(nb):
                 s0, s1 = int(starts[r]), int(starts[r + 1])
@@ -1046,34 +920,33 @@ def fuzzy_dedup_keep_one(
 def simhash_fingerprints(
     df: DataFrame, id_col: str, text_col: str, bits: int = 32,
     portable: bool = True, script_aware: bool = False,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Per-document SimHash (Charikar '02): token hashes vote per bit.
 
-    Returns ``(id, simhash)`` with ``simhash`` a ``bits``-wide integer.
-    Tokenization and the per-token hash stay Catalyst expressions (one
-    JVM-intrinsic hash per token, bit-exact with the oracle recipe);
-    only the vote fold differs by ``engine``:
+    Returns ``(id, simhash)`` with ``simhash`` a ``bits``-wide integer
+    (``1 <= bits <= 63``, so it fits a non-negative long; anything else
+    raises ``ValueError`` before a job runs).  Tokenization and the
+    per-token hash stay Catalyst expressions (one JVM-intrinsic hash per
+    token, bit-exact with the oracle recipe); the token-hash arrays
+    cross as Arrow list buffers and the O(tokens × bits) vote runs as
+    numpy shifts + ``np.add.reduceat`` segment sums — a higher-order
+    ``aggregate``/``zip_with`` fold is interpreted per element and was
+    the measured wall of the fingerprint stage (~97%-interpreter
+    profile, BASELINE.md r9).
 
-    * ``"arrow"`` (default, round 13): the token-hash arrays cross as
-      Arrow list buffers and the O(tokens × bits) vote accumulation
-      runs as numpy shifts + ``np.add.reduceat`` segment sums —
-      higher-order ``aggregate``/``zip_with`` lambdas are interpreted
-      per element, and the fold was the measured wall of the
-      fingerprint stage (~97%-interpreter profile, BASELINE.md r9).
-    * ``"expr"`` keeps the pure-expression fold: ONE fold over the
-      token-hash array accumulating all ``bits`` vote counters at once
-      (an earlier version ran one ``aggregate`` per bit — ``bits``
-      traversals of the array; the single fold is ~30% faster at sf0.1
-      and scales with tokens, not tokens×bits).
-
-    Both engines are bit-identical (property-tested, incl. null text
-    and empty-token docs).  ``portable=False`` swaps the
+    Bit ``b`` is set when at least half of the doc's tokens have bit
+    ``b`` set; a doc with no tokens gets every bit set, and null text a
+    null simhash.  ``tests/near_dup_reference.py`` restates this as a
+    per-bit majority in plain Python.  ``portable=False`` swaps the
     oracle-reproducible md5 token hash for xxhash64 — the production
     path.
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
+    if not 1 <= bits <= 63:
+        raise ValueError(f"bits must be in 1..63, got {bits!r}")
+    import numpy as np
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
     # materialize token hashes in their own projection: one hash per
     # token total, instead of one per token per bit (32x less hashing)
     token_hash = portable_hash64 if portable else fast_hash64
@@ -1089,97 +962,62 @@ def simhash_fingerprints(
         F.col(id_col).alias("id"),
         F.transform(toks, lambda t: token_hash(t)).alias("__hs"),
     )
-    if engine == "arrow":
-        import numpy as np
-
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        out_schema = StructType(
-            [
-                StructField("id", df.schema[id_col].dataType),
-                StructField("simhash", LongType()),
-            ]
-        )
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                ids = batch.column(0)
-                hs_la = batch.column(1)
-                n = len(hs_la)
-                if n == 0:
-                    continue
-                if isinstance(hs_la, pa.ChunkedArray):
-                    hs_la = hs_la.combine_chunks()
-                valid = (
-                    np.asarray(hs_la.is_valid())
-                    if hs_la.null_count
-                    else np.ones(n, dtype=bool)
-                )
-                # null __hs (null text) -> null simhash, matching the
-                # expression fold's aggregate(null) = null
-                counts = np.zeros(n, dtype=np.int64)
-                lens = hs_la.value_lengths().to_numpy(zero_copy_only=False)
-                counts[valid] = np.asarray(lens, dtype=np.float64)[
-                    valid
-                ].astype(np.int64)
-                flat = hs_la.flatten().to_numpy(zero_copy_only=False)
-                flat = flat.astype(np.int64, copy=False)
-                sim = np.zeros(n, dtype=np.int64)
-                nonempty = counts > 0
-                ne_counts = counts[nonempty]
-                if ne_counts.size:
-                    starts = np.zeros(ne_counts.size, dtype=np.int64)
-                    if ne_counts.size > 1:
-                        np.cumsum(ne_counts[:-1], out=starts[1:])
-                    ne_sim = np.zeros(ne_counts.size, dtype=np.int64)
-                    for b in range(bits):
-                        ones = np.add.reduceat(
-                            (flat >> np.int64(b)) & np.int64(1), starts
-                        )
-                        # vote = 2*ones - n_tokens; bit set when >= 0
-                        ne_sim += ((2 * ones >= ne_counts).astype(np.int64)
-                                   << np.int64(b))
-                    sim[nonempty] = ne_sim
-                # empty token arrays: every vote counter is 0 (>= 0),
-                # so every bit is set — same as the expression fold
-                sim[valid & ~nonempty] = (1 << bits) - 1
-                out_sim = pa.array(sim, mask=~valid)
-                yield pa.RecordBatch.from_arrays(
-                    [ids, out_sim], ["id", "simhash"]
-                )
-
-        return hashed.mapInArrow(kernel, out_schema)
-
-    def bits_pm1(h: Column) -> Column:
-        # literal shifts (shiftright needs a constant count): the token's
-        # ±1 vote for every bit position
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-                for b in range(bits)
-            ]
-        )
-
-    votes = F.aggregate(
-        F.col("__hs"),
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, bits_pm1(h), lambda a, v: a + v),
+    out_schema = StructType(
+        [
+            StructField("id", df.schema[id_col].dataType),
+            StructField("simhash", LongType()),
+        ]
     )
-    powers = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    sim = F.aggregate(
-        F.zip_with(
-            votes,
-            powers,
-            lambda v, p: F.when(v >= 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    return hashed.select("id", sim.alias("simhash"))
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids = batch.column(0)
+            hs_la = batch.column(1)
+            n = len(hs_la)
+            if n == 0:
+                continue
+            if isinstance(hs_la, pa.ChunkedArray):
+                hs_la = hs_la.combine_chunks()
+            valid = (
+                np.asarray(hs_la.is_valid())
+                if hs_la.null_count
+                else np.ones(n, dtype=bool)
+            )
+            # null __hs (null text) -> null simhash
+            counts = np.zeros(n, dtype=np.int64)
+            lens = hs_la.value_lengths().to_numpy(zero_copy_only=False)
+            counts[valid] = np.asarray(lens, dtype=np.float64)[
+                valid
+            ].astype(np.int64)
+            flat = hs_la.flatten().to_numpy(zero_copy_only=False)
+            flat = flat.astype(np.int64, copy=False)
+            sim = np.zeros(n, dtype=np.int64)
+            nonempty = counts > 0
+            ne_counts = counts[nonempty]
+            if ne_counts.size:
+                starts = np.zeros(ne_counts.size, dtype=np.int64)
+                if ne_counts.size > 1:
+                    np.cumsum(ne_counts[:-1], out=starts[1:])
+                ne_sim = np.zeros(ne_counts.size, dtype=np.int64)
+                for b in range(bits):
+                    ones = np.add.reduceat(
+                        (flat >> np.int64(b)) & np.int64(1), starts
+                    )
+                    # vote = 2*ones - n_tokens; bit set when >= 0
+                    ne_sim += ((2 * ones >= ne_counts).astype(np.int64)
+                               << np.int64(b))
+                sim[nonempty] = ne_sim
+            # empty token arrays: every vote counter is 0 (>= 0),
+            # so every bit is set
+            sim[valid & ~nonempty] = (1 << bits) - 1
+            out_sim = pa.array(sim, mask=~valid)
+            yield pa.RecordBatch.from_arrays(
+                [ids, out_sim], ["id", "simhash"]
+            )
+
+    return hashed.mapInArrow(kernel, out_schema)
 
 
 def simhash_near_dup_pairs(
@@ -1192,9 +1030,10 @@ def simhash_near_dup_pairs(
     portable: bool = True,
     max_bucket_size: Optional[int] = None,
     script_aware: bool = False,
-    engine: str = "arrow",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= ``max_hamming``.
+    """Near-dup pairs by SimHash hamming distance <= ``max_hamming``:
+    :func:`simhash_fingerprints` (``bits`` in 1..63) fed to
+    :func:`fingerprint_near_dup_pairs`.
 
     Blocking: two signatures within hamming k must agree exactly on at
     least one of k+1 disjoint bit blocks (pigeonhole); we join on
@@ -1202,10 +1041,11 @@ def simhash_near_dup_pairs(
     ``(id_a, id_b, hamming)``.
 
     ``max_bucket_size`` (off by default — the oracle-checked result is
-    uncapped) skips blocks whose bucket exceeds the cap: at 100 TB a
-    degenerate block (e.g. near-constant simhash over templated short
-    docs) would pair quadratically; a true pair within ``max_hamming``
-    agrees on ≥1 of the other blocks, so recall loss is small.
+    uncapped) collapses blocks whose bucket exceeds the cap (see
+    :func:`fingerprint_near_dup_pairs`): at 100 TB a degenerate block
+    (e.g. near-constant simhash over templated short docs) would pair
+    quadratically; a true pair within ``max_hamming`` agrees on ≥1 of
+    the other blocks, so recall loss is small.
     Measured at sf0.1 (tools/diag_simhash.py): max bucket 785 (md5) /
     1122 (xxhash64), so the default cap-off is safe at test scale.
     """
@@ -1216,7 +1056,6 @@ def simhash_near_dup_pairs(
     return fingerprint_near_dup_pairs(
         fps, "id", "simhash", bits=bits, max_hamming=max_hamming,
         block_bits=block_bits, max_bucket_size=max_bucket_size,
-        engine=engine,
     )
 
 
@@ -1245,8 +1084,7 @@ def _bucket_hamming_pairs_np(
 ):
     """All (i < j) pairs within ``max_hamming`` inside one bucket:
     chunked m x m XOR matrix + byte-table popcount — ~2 ns/candidate
-    vs the Catalyst slice-explosion path's per-struct evaluation, and
-    bounded memory (``row_chunk_budget`` candidate cells per chunk).
+    and bounded memory (``row_chunk_budget`` candidate cells per chunk).
     Yields (id_a, id_b, hamming) arrays with id_a/id_b min/max per
     pair."""
     import numpy as np
@@ -1282,8 +1120,7 @@ def _bucket_pairs_with_collapse(
     bucket catches them).
 
     Under the cap (or cap None): the full pairwise kernel — every
-    (i < j) pair within ``max_hamming``, full cliques, identical to
-    the Catalyst expression path.  Over the cap: each
+    (i < j) pair within ``max_hamming``, full cliques.  Over the cap: each
     identical-fingerprint group collapses to chain pairs from its
     minimum-``ranks`` member (hamming 0, preserves connectivity), and
     cross-fingerprint candidates pair only between those group
@@ -1338,7 +1175,6 @@ def fingerprint_near_dup_pairs(
     max_hamming: int = 3,
     block_bits: int = 8,
     max_bucket_size: Optional[int] = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs over ANY precomputed integer fingerprint column
     (SimHash, image pHash, audio fingerprint, ...) by hamming distance
@@ -1346,34 +1182,32 @@ def fingerprint_near_dup_pairs(
     of :func:`simhash_near_dup_pairs` (r12c, for
     :func:`~hermes_spark.operators.multimodal.image_near_dup_pairs`).
     Null fingerprints are dropped up front (a null can't be proven a
-    near-dup; mirrors the expression path's null-comparison semantics).
+    near-dup).
 
     Pigeonhole blocking: signatures within hamming k agree exactly on
     >= 1 of k+1 disjoint bit blocks, so the join key is (block index,
     block bits) — ONE shuffle, no cross join.  Arithmetic sign
     extension from negative 64-bit hashes is masked off by the
-    block-width AND.  Returns ``(id_a, id_b, hamming)``.
+    block-width AND.  Returns ``(id_a, id_b, hamming)``; under the cap
+    the pair set equals a brute-force hamming cross check
+    (``tests/test_image_phash.py``).
 
-    ``engine``: in-bucket pairing is inherently O(sum m_k²) over bucket
-    sizes, and ``block_bits``-wide buckets SATURATE once n >> 2^width
-    per block (200k 64-bit hashes at width 8 imply ~600M candidate
-    cells).  ``"arrow"`` (default) runs that inner loop as a chunked
-    numpy XOR matrix + byte-table popcount (~2 ns/candidate, bounded
-    memory); ``"expr"`` keeps the pure-Catalyst slice/struct path —
-    identical output (property-tested), fine for small corpora and
-    engine-independence checks, but its per-candidate struct
-    materialization measured ~100x slower and memory-unbounded at the
-    200k-image probe scale (BASELINE.md r12c).
+    In-bucket pairing is inherently O(sum m_k²) over bucket sizes, and
+    ``block_bits``-wide buckets SATURATE once n >> 2^width per block
+    (200k 64-bit hashes at width 8 imply ~600M candidate cells), so it
+    runs as a chunked numpy XOR matrix + byte-table popcount
+    (~2 ns/candidate, bounded memory).
 
-    ``max_bucket_size`` semantics differ by engine for OVER-cap buckets
-    (under the cap both emit full cliques): ``"arrow"`` collapses them
-    — identical-fingerprint chains + distinct-fingerprint
-    representative pairs (see :func:`_bucket_pairs_with_collapse`), so
-    a micro-batch of >cap IDENTICAL thumbnails still dedups;
-    ``"expr"`` keeps the original drop-the-bucket behavior.
+    ``max_bucket_size`` (``None`` = uncapped) collapses OVER-cap
+    buckets instead of dropping them: identical-fingerprint chains +
+    distinct-fingerprint representative pairs (see
+    :func:`_bucket_pairs_with_collapse`), so a micro-batch of >cap
+    IDENTICAL thumbnails still dedups.
     """
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"engine must be 'arrow' or 'expr', got {engine!r}")
+    import numpy as np
+
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     n_blocks = max(max_hamming + 1, bits // block_bits)
     width = bits // n_blocks
 
@@ -1396,121 +1230,76 @@ def fingerprint_near_dup_pairs(
         )
         .select("id", "__fp", block_key.alias("__k"))
     )
-    if engine == "arrow":
-        import numpy as np
-
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        grouped = (
-            bucketed.groupBy("__k")
-            .agg(
-                F.collect_list("id").alias("__ids"),
-                F.collect_list("__fp").alias("__fps"),
-            )
-            .filter(F.size("__ids") >= 2)
-        )
-        # NO bucket-size pre-filter here: over-cap buckets are handed
-        # to the kernel, which COLLAPSES them (identical chains +
-        # representative pairs) instead of dropping them outright
-        grouped = grouped.select("__ids", "__fps")
-        id_type = fps.schema[id_col].dataType
-        out_schema = StructType(
-            [
-                StructField("id_a", id_type),
-                StructField("id_b", id_type),
-                StructField("hamming", IntegerType()),
-            ]
-        )
-
-        # mapInArrow, not mapInPandas (round 13, guide §4): member ids
-        # and fingerprints are numpy views of the Arrow list buffers —
-        # the pandas path materialized a Python list per bucket cell on
-        # the way in and re-boxed the pair frame on the way out.  The
-        # two collect_lists fill in one aggregation pass, so index i of
-        # both comes from the same input row (nulls were filtered
-        # before bucketing — a null fp would desync the two lists).
-        def kernel(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                ids_la = batch.column(0)
-                fps_la = batch.column(1)
-                nb = len(ids_la)
-                if nb == 0:
-                    continue
-                counts = ids_la.value_lengths().to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int64)
-                fcounts = fps_la.value_lengths().to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int64)
-                assert (counts == fcounts).all()
-                ids_np = ids_la.flatten().to_numpy(zero_copy_only=False)
-                fps_np = (
-                    fps_la.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64, copy=False)
-                )
-                starts = np.zeros(nb + 1, dtype=np.int64)
-                np.cumsum(counts, out=starts[1:])
-                parts_a, parts_b, parts_h = [], [], []
-                for r in range(nb):
-                    s0, s1 = int(starts[r]), int(starts[r + 1])
-                    ids = ids_np[s0:s1]
-                    f = fps_np[s0:s1]
-                    for i, j, h in _bucket_pairs_with_collapse(
-                        ids, f, max_hamming, max_bucket_size
-                    ):
-                        ia, ib = ids[i], ids[j]
-                        swap = ia > ib
-                        parts_a.append(np.where(swap, ib, ia))
-                        parts_b.append(np.where(swap, ia, ib))
-                        parts_h.append(h)
-                if parts_a:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.concatenate(parts_a)),
-                            pa.array(np.concatenate(parts_b)),
-                            pa.array(
-                                np.concatenate(parts_h).astype(
-                                    np.int32, copy=False
-                                )
-                            ),
-                        ],
-                        ["id_a", "id_b", "hamming"],
-                    )
-
-        return grouped.mapInArrow(kernel, out_schema).distinct()
-
+    # NO bucket-size pre-filter here: over-cap buckets are handed
+    # to the kernel, which COLLAPSES them (identical chains +
+    # representative pairs) instead of dropping them outright
     grouped = (
         bucketed.groupBy("__k")
-        .agg(F.collect_list(F.struct("id", "__fp")).alias("__members"))
-        .filter(F.size("__members") >= 2)
-    )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.size("__members") <= max_bucket_size)
-    members = F.col("__members")
-    pair_structs = F.flatten(
-        F.transform(
-            members,
-            lambda m1, i: F.transform(
-                F.slice(members, i + 2, F.size(members)),
-                lambda m2: F.struct(
-                    F.least(m1["id"], m2["id"]).alias("id_a"),
-                    F.greatest(m1["id"], m2["id"]).alias("id_b"),
-                    F.bit_count(
-                        m1["__fp"].bitwiseXOR(m2["__fp"])
-                    ).alias("hamming"),
-                ),
-            ),
+        .agg(
+            F.collect_list("id").alias("__ids"),
+            F.collect_list("__fp").alias("__fps"),
         )
+        .filter(F.size("__ids") >= 2)
+        .select("__ids", "__fps")
     )
-    return (
-        grouped.select(F.explode(pair_structs).alias("__p"))
-        .select("__p.id_a", "__p.id_b", "__p.hamming")
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    id_type = fps.schema[id_col].dataType
+    out_schema = StructType(
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("hamming", IntegerType()),
+        ]
     )
+
+    # mapInArrow, not mapInPandas (round 13, guide §4): member ids
+    # and fingerprints are numpy views of the Arrow list buffers —
+    # the pandas path materialized a Python list per bucket cell on
+    # the way in and re-boxed the pair frame on the way out.  The
+    # two collect_lists fill in one aggregation pass, so index i of
+    # both comes from the same input row (nulls were filtered
+    # before bucketing — a null fp would desync the two lists;
+    # _unpack_buckets raises if they ever differ in length).
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            nb = batch.num_rows
+            if nb == 0:
+                continue
+            ids_np, fps_flat, starts = _unpack_buckets(
+                batch.column(0), batch.column(1)
+            )
+            fps_np = fps_flat.to_numpy(zero_copy_only=False).astype(
+                np.int64, copy=False
+            )
+            parts_a, parts_b, parts_h = [], [], []
+            for r in range(nb):
+                s0, s1 = int(starts[r]), int(starts[r + 1])
+                ids = ids_np[s0:s1]
+                f = fps_np[s0:s1]
+                for i, j, h in _bucket_pairs_with_collapse(
+                    ids, f, max_hamming, max_bucket_size
+                ):
+                    ia, ib = ids[i], ids[j]
+                    swap = ia > ib
+                    parts_a.append(np.where(swap, ib, ia))
+                    parts_b.append(np.where(swap, ia, ib))
+                    parts_h.append(h)
+            if parts_a:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.concatenate(parts_a)),
+                        pa.array(np.concatenate(parts_b)),
+                        pa.array(
+                            np.concatenate(parts_h).astype(
+                                np.int32, copy=False
+                            )
+                        ),
+                    ],
+                    ["id_a", "id_b", "hamming"],
+                )
+
+    return grouped.mapInArrow(kernel, out_schema).distinct()
 
 
 def blocking_key_pairs(
@@ -1673,7 +1462,7 @@ def banded_match_pairs(
     shingle/hash pipeline once per join side AND go quadratic on a hot
     band; buckets larger than ``max_bucket_size`` are COLLAPSED
     (identical-signature chaining + representative pairing/star — see
-    :func:`_gathered_bucket_pairs`), so a mega-cluster of near-identical
+    :func:`_bucket_pairs_np`), so a mega-cluster of near-identical
     documents still connects in O(n) instead of silently producing zero
     pairs.  Returns ``(id_a, id_b)`` with ``id_a < id_b``.
 
@@ -1736,7 +1525,7 @@ def dedup_against(
     collapsed to distinct ``(__band, __sig)``), never the full history
     row set.  The in-batch pairing collapses oversized band buckets
     (identical-signature chains + representative pairs/star, see
-    :func:`_gathered_bucket_pairs`) instead of dropping them, so
+    :func:`_bucket_pairs_np`) instead of dropping them, so
     mega-clusters still dedup; the history join skips only bands whose
     DISTINCT-signature count exceeds ``max_bucket_size``.
     """

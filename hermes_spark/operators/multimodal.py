@@ -525,9 +525,9 @@ def video_near_dup_pairs(
         .select("__vid", "frame_idx", "phash", block_key.alias("__k"))
     )
     # in-bucket frame pairing runs as the same chunked numpy XOR +
-    # popcount kernel as fingerprint_near_dup_pairs(engine="arrow") —
-    # 8-bit blocks saturate once frames >> 256 per block and the
-    # Catalyst slice/struct path materializes every candidate (the
+    # popcount kernel as fingerprint_near_dup_pairs — 8-bit blocks
+    # saturate once frames >> 256 per block, and a Catalyst
+    # slice/struct pairing materializes every candidate (the
     # 200k-image probe measured it heap-unbounded; BASELINE.md r12c)
     import numpy as np
 

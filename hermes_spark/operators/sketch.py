@@ -710,7 +710,7 @@ def bloom_member(
     # F.array(*[F.lit(w).cast("long")]) made ~2*m/64 py4j round trips
     # plus a 2048-child CreateArray the analyzer re-walked per probe
     # reference -- measured 5-7 s of pure DRIVER time per bloom_member
-    # call at m=2^17 (tools/r12_opt_probes.py bloom_decomp).
+    # call at m=2^17 (OPTIMIZATION_r12.md, bloom_join_parts).
     # F.lit(ndarray[int64]) is ONE py4j call producing ONE
     # Literal(ArrayType(LongType)) node; the little-endian np.frombuffer
     # view IS the two's-complement signed decode the old per-word loop

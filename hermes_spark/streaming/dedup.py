@@ -159,7 +159,6 @@ def stream_minhash_dedup(
     min_jaccard: float = 0.7,
     max_bucket_size: int = 1000,
     on_batch: Optional[Callable[[DataFrame, int], None]] = None,
-    sig_engine: str = "arrow",
     compact_every: int = 0,
     **start_kwargs,
 ) -> StreamingQuery:
@@ -171,9 +170,8 @@ def stream_minhash_dedup(
 
     1. signature + LSH band keys for every incoming doc (the batch
        operator's ``minhash_signatures`` front half — portable md5
-       hash family, ``sig_engine="arrow"`` kernel by default (round
-       11; ``"expr"`` keeps the all-JVM plan) — so batch and
-       streaming agree on what counts as a near-dup);
+       hash family, Arrow signature kernel — so batch and streaming
+       agree on what counts as a near-dup);
     2. candidate join against the accepted-signature store at
        ``state_path`` on band key only — the join touches O(colliding
        bands) rows, never the full history — then exact signature
@@ -223,13 +221,8 @@ def stream_minhash_dedup(
     def sig_frame(df: DataFrame) -> DataFrame:
         # shared signature front half (operators.dedup.minhash_signatures,
         # portable md5 hash family): foreachBatch hands us a BATCH frame,
-        # so the Arrow kernel is usable and is the default — the round-11
-        # 1M-page probe measured the inlined expression path at 882
-        # pages/s with ~97% of the per-batch wall in interpreted
-        # higher-order lambdas (the same decomposition as the batch
-        # operator's r9 finding).  Both engines are bit-identical
-        # (property-tested), so the signature store stays valid across
-        # engine choices and batch/stream agreement is unchanged.
+        # so the Arrow kernel runs here too, and one kernel for batch and
+        # stream keeps the signature store valid for both.
         from ..operators.dedup import minhash_signatures
 
         rows_per_band = num_hashes // num_bands
@@ -237,7 +230,7 @@ def stream_minhash_dedup(
             df.select(F.col(id_col), F.col(text_col)),
             id_col, text_col,
             shingle_n=shingle_n, num_hashes=num_hashes,
-            portable=True, sig_engine=sig_engine,
+            portable=True,
         )
         return sigs.select(
             "__id",

@@ -9,6 +9,8 @@ from hermes_spark.operators import (
     simhash_near_dup_pairs,
 )
 
+from near_dup_reference import minhash_pairs_reference
+
 
 def docs(spark):
     return spark.createDataFrame(
@@ -531,46 +533,100 @@ def _pair_set(df):
     }
 
 
-def test_minhash_pair_engines_bit_identical(spark, documents):
-    """The Arrow pair kernel and the expression path must produce the
-    SAME (id_a, id_b, est_jaccard) set — including the oversized-bucket
-    collapse (forced here with a tiny cap) and the min_jaccard push-down."""
+def _reference_pairs(corpus, stats=None, num_hashes=16, num_bands=4,
+                     max_bucket_size=1000, min_jaccard=0.0):
+    from hermes_spark.operators import minhash_signatures
+
+    sigs = {
+        r["__id"]: list(r["__sig"])
+        for r in minhash_signatures(
+            corpus, "doc_id", "text", num_hashes=num_hashes
+        ).collect()
+    }
+    return minhash_pairs_reference(
+        sigs, num_bands, max_bucket_size, min_jaccard, stats=stats
+    )
+
+
+def test_minhash_pairs_match_python_reference(spark, documents):
+    """The Arrow pair kernel must produce the SAME (id_a, id_b,
+    est_jaccard) set as the plain-Python banding reference over the
+    same signatures — including the oversized-bucket collapse (forced
+    here with a tiny cap, down to the representative star) and the
+    min_jaccard push-down."""
     corpus = documents.limit(400)
+    stats = {}
     for kwargs in (
         dict(),  # default: all-pairs path
         dict(max_bucket_size=3),  # force chain/reps/star collapse
         dict(min_jaccard=0.5),  # kernel-side prefilter
         dict(max_bucket_size=3, min_jaccard=0.25, num_hashes=32, num_bands=8),
     ):
-        arrow = minhash_lsh_pairs(
-            corpus, "doc_id", "text", pair_engine="arrow", **kwargs
-        )
-        expr = minhash_lsh_pairs(
-            corpus, "doc_id", "text", pair_engine="expr", **kwargs
-        )
-        assert _pair_set(arrow) == _pair_set(expr), kwargs
+        got = minhash_lsh_pairs(corpus, "doc_id", "text", **kwargs)
+        assert _pair_set(got) == _reference_pairs(
+            corpus, stats, **kwargs), kwargs
+    # the cap-3 runs reached both over-cap branches
+    assert stats.get("collapsed", 0) > 0 and stats.get("star", 0) > 0, stats
 
 
-def test_minhash_pair_engine_string_ids(spark):
+def test_minhash_pairs_string_ids_match_reference(spark):
     """Non-numeric ids go through the kernel's Python-sort fallback and
-    string least/greatest — must still match the expression path."""
+    string ordering — must still match the plain-Python reference."""
     rows = [(f"doc-{i:03d}", f"shared boilerplate text {i % 3}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    arrow = minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=4)
-    expr = minhash_lsh_pairs(
-        df, "doc_id", "text", max_bucket_size=4, pair_engine="expr"
-    )
-    assert _pair_set(arrow) == _pair_set(expr)
-    assert len(_pair_set(arrow)) > 0
+    got = _pair_set(minhash_lsh_pairs(df, "doc_id", "text", max_bucket_size=4))
+    assert got == _reference_pairs(df, max_bucket_size=4)
+    assert len(got) > 0
 
 
-def test_minhash_rejects_unknown_engine(spark, documents):
+def test_unpack_buckets_rejects_misaligned_lists():
+    """The pair kernels' shared unpacker: aligned id/value lists give
+    flat ids, flat values and bucket offsets; a bucket whose two lists
+    differ in length raises with both counts."""
+    import pyarrow as pa
     import pytest
 
-    with pytest.raises(ValueError, match="pair_engine"):
-        minhash_lsh_pairs(
-            documents, "doc_id", "text", pair_engine="nope"
-        )
+    from hermes_spark.operators.dedup import _unpack_buckets
+
+    ids = pa.array([[1, 2, 3], [7, 8]])
+    fps = pa.array([[10, 20, 30], [70, 80]])
+    flat_ids, flat_fps, starts = _unpack_buckets(ids, fps)
+    assert flat_ids.tolist() == [1, 2, 3, 7, 8]
+    assert flat_fps.to_pylist() == [10, 20, 30, 70, 80]
+    assert starts.tolist() == [0, 3, 5]
+    # signatures: one list level stays for the caller to flatten
+    sigs = pa.array([[[1, 1], [2, 2], [3, 3]], [[7, 7], [8, 8]]])
+    _, flat_sigs, _ = _unpack_buckets(ids, sigs)
+    assert flat_sigs.to_pylist() == [[1, 1], [2, 2], [3, 3], [7, 7], [8, 8]]
+
+    short = pa.array([[10, 20, 30], [70]])
+    with pytest.raises(ValueError, match="bucket 1 has 2 ids but 1 values"):
+        _unpack_buckets(ids, short)
+
+
+def test_simhash_bits_range(spark):
+    """bits=63 is the widest SimHash that fits a non-negative long; 64
+    and 0 raise before any job runs."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "")],
+        "doc_id long, text string",
+    )
+    fps = {
+        r["id"]: r["simhash"]
+        for r in simhash_fingerprints(df, "doc_id", "text", bits=63).collect()
+    }
+    assert fps[3] == (1 << 63) - 1  # no tokens: every bit set
+    pairs = simhash_near_dup_pairs(
+        df, "doc_id", "text", bits=63, max_hamming=3
+    ).collect()
+    assert {(r["id_a"], r["id_b"], r["hamming"]) for r in pairs} == {(1, 2, 0)}
+    for bad in (0, 64):
+        with pytest.raises(ValueError, match="bits must be in 1..63"):
+            simhash_fingerprints(df, "doc_id", "text", bits=bad)
+        with pytest.raises(ValueError, match="bits must be in 1..63"):
+            simhash_near_dup_pairs(df, "doc_id", "text", bits=bad)
 
 
 def test_exact_dedup_incremental(spark):

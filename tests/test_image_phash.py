@@ -26,6 +26,28 @@ def _ham(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
+def _s64(x: int) -> int:
+    x &= (1 << 64) - 1
+    return x - (1 << 64) if x >= 1 << 63 else x
+
+
+def _brute_force_pairs(ids, fps, max_hamming):
+    """All-pairs hamming reference: ``{(id_a, id_b): hamming}`` with
+    ``id_a < id_b`` for every pair within ``max_hamming``."""
+    expected = {}
+    for i in range(len(fps)):
+        for j in range(i + 1, len(fps)):
+            h = _ham(fps[i], fps[j])
+            if h <= max_hamming:
+                a, b = sorted((ids[i], ids[j]))
+                expected[(a, b)] = h
+    return expected
+
+
+def _pairs(frame):
+    return {(r["id_a"], r["id_b"]): r["hamming"] for r in frame.collect()}
+
+
 # ------------------------------------------------------------------ kernel
 
 
@@ -119,31 +141,16 @@ def test_fingerprint_pairs_generic_matches_direct_hamming(spark):
     including negative (bit-63) hashes."""
     from hermes_spark.operators.dedup import fingerprint_near_dup_pairs
 
-    def s64(x: int) -> int:
-        x &= (1 << 64) - 1
-        return x - (1 << 64) if x >= 1 << 63 else x
-
     rng = np.random.default_rng(5)
     fps = [int(x) for x in rng.integers(-(1 << 62), 1 << 62, 30)]
-    fps.append(-(1 << 63) + 5)            # sign-extension exercise
-    fps.append(s64(fps[0] ^ 0b101))       # planted hamming-2 twin
-    fps.append(s64(fps[31] ^ (1 << 63)))  # differs only in the sign bit
-    df = spark.createDataFrame(
-        [(i, f) for i, f in enumerate(fps)], ["id", "fp"]
-    )
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in fingerprint_near_dup_pairs(
-            df, "id", "fp", bits=64, max_hamming=3
-        ).collect()
-    }
-    expected = {}
-    for i in range(len(fps)):
-        for j in range(i + 1, len(fps)):
-            h = _ham(fps[i] & ((1 << 64) - 1), fps[j] & ((1 << 64) - 1))
-            if h <= 3:
-                expected[(i, j)] = h
-    assert got == expected
+    fps.append(-(1 << 63) + 5)             # sign-extension exercise
+    fps.append(_s64(fps[0] ^ 0b101))       # planted hamming-2 twin
+    fps.append(_s64(fps[31] ^ (1 << 63)))  # differs only in the sign bit
+    ids = list(range(len(fps)))
+    df = spark.createDataFrame(list(zip(ids, fps)), ["id", "fp"])
+    got = _pairs(fingerprint_near_dup_pairs(
+        df, "id", "fp", bits=64, max_hamming=3))
+    assert got == _brute_force_pairs(ids, fps, 3)
 
 
 # ------------------------------------------------------------------- video
@@ -296,41 +303,31 @@ def test_fingerprint_dedup_against_component_vs_greedy(spark):
 
 
 def test_fingerprint_pairs_arrow_equals_expr(spark):
-    """Property: the arrow in-bucket kernel and the Catalyst expression
-    path emit the IDENTICAL pair set (ids + hamming), including
-    negative hashes, dense near-dup clusters and string ids."""
+    """Property: the arrow in-bucket kernel emits exactly the pair set
+    (ids + hamming) of a direct all-pairs hamming computation, including
+    negative hashes, dense near-dup clusters at two thresholds and
+    string ids."""
     from hermes_spark.operators.dedup import fingerprint_near_dup_pairs
 
     rng = np.random.default_rng(11)
-
-    def s64(x: int) -> int:
-        x &= (1 << 64) - 1
-        return x - (1 << 64) if x >= 1 << 63 else x
-
     fps = [int(x) for x in rng.integers(-(1 << 62), 1 << 62, 60)]
     # dense cluster: 12 variants of one hash within 0-4 bits
-    seedfp = fps[0]
     for i in range(12):
         flip = 0
         for b in rng.integers(0, 64, i % 5):
             flip |= 1 << int(b)
-        fps.append(s64(seedfp ^ flip))
-    rows = [(i, f) for i, f in enumerate(fps)]
-    df = spark.createDataFrame(rows, ["id", "fp"])
+        fps.append(_s64(fps[0] ^ flip))
+    ids = list(range(len(fps)))
+    df = spark.createDataFrame(list(zip(ids, fps)), ["id", "fp"])
     for mh in (2, 4):
-        a = {tuple(r) for r in fingerprint_near_dup_pairs(
-            df, "id", "fp", max_hamming=mh, engine="arrow").collect()}
-        e = {tuple(r) for r in fingerprint_near_dup_pairs(
-            df, "id", "fp", max_hamming=mh, engine="expr").collect()}
-        assert a == e, (mh, a ^ e)
+        got = _pairs(fingerprint_near_dup_pairs(
+            df, "id", "fp", max_hamming=mh))
+        assert got == _brute_force_pairs(ids, fps, mh), mh
     # string ids round-trip through the kernel
-    sdf = spark.createDataFrame(
-        [(f"doc-{i}", f) for i, f in enumerate(fps)], ["id", "fp"])
-    a = {tuple(r) for r in fingerprint_near_dup_pairs(
-        sdf, "id", "fp", max_hamming=3, engine="arrow").collect()}
-    e = {tuple(r) for r in fingerprint_near_dup_pairs(
-        sdf, "id", "fp", max_hamming=3, engine="expr").collect()}
-    assert a == e
+    sids = [f"doc-{i}" for i in ids]
+    sdf = spark.createDataFrame(list(zip(sids, fps)), ["id", "fp"])
+    got = _pairs(fingerprint_near_dup_pairs(sdf, "id", "fp", max_hamming=3))
+    assert got == _brute_force_pairs(sids, fps, 3)
 
 
 # --------------------------------------------------------------- streaming
@@ -514,15 +511,17 @@ def test_store_saturation_exact_fallback(spark):
 
 
 def test_simhash_engine_kwarg_passthrough(spark, documents):
-    """r12c review: simhash_near_dup_pairs exposes engine= so callers
-    can run the pure-Catalyst path for engine-independence checks."""
-    from hermes_spark.operators.dedup import simhash_near_dup_pairs
+    """simhash_near_dup_pairs passes ``bits`` and ``max_hamming``
+    through to the fingerprint kernel: its pairs equal a direct
+    all-pairs hamming check over the 32-bit SimHash fingerprints."""
+    from hermes_spark.operators.dedup import (
+        simhash_fingerprints,
+        simhash_near_dup_pairs,
+    )
 
     docs = documents.limit(60)
-    a = {tuple(r) for r in simhash_near_dup_pairs(
-        docs, "doc_id", "text", bits=32, max_hamming=6,
-        engine="arrow").collect()}
-    e = {tuple(r) for r in simhash_near_dup_pairs(
-        docs, "doc_id", "text", bits=32, max_hamming=6,
-        engine="expr").collect()}
-    assert a == e
+    sim = simhash_fingerprints(docs, "doc_id", "text", bits=32).collect()
+    got = _pairs(simhash_near_dup_pairs(
+        docs, "doc_id", "text", bits=32, max_hamming=6))
+    assert got == _brute_force_pairs(
+        [r["id"] for r in sim], [r["simhash"] for r in sim], 6)

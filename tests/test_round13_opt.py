@@ -16,6 +16,8 @@ from hermes_spark.functions.sigkernel import (
     md5_prefix32,
 )
 
+from near_dup_reference import simhash_reference
+
 
 def _loop_prefix32(rows: np.ndarray) -> np.ndarray:
     n, w = rows.shape
@@ -89,9 +91,31 @@ def test_hash31_np_portable_all_lengths_incl_multiblock():
     assert (got == want).all()
 
 
+def _simhash_reference_frame(df, portable):
+    """{doc_id: simhash} by a plain-Python per-bit majority over the
+    collected token-hash arrays (the operator's tokenizer and hash
+    expressions, its vote fold left out)."""
+    from pyspark.sql import functions as F
+
+    from hermes_spark.functions.hashing import fast_hash64, portable_hash64
+    from hermes_spark.functions.text import tokens
+
+    token_hash = portable_hash64 if portable else fast_hash64
+    hashed = df.select(
+        "doc_id",
+        F.transform(
+            tokens(F.lower(F.col("text"))), lambda t: token_hash(t)
+        ).alias("hs"),
+    )
+    return {
+        r["doc_id"]: simhash_reference(r["hs"], 32) for r in hashed.collect()
+    }
+
+
 def test_simhash_vote_engines_identical(spark):
-    """The arrow vote fold must match the expression fold bit-for-bit,
-    including null text, empty/whitespace text, and non-ASCII."""
+    """The numpy vote fold must match the plain-Python per-bit majority
+    bit-for-bit, including null text, empty/whitespace text, and
+    non-ASCII."""
     from hermes_spark.operators.dedup import simhash_fingerprints
 
     rows = [
@@ -111,25 +135,21 @@ def test_simhash_vote_engines_identical(spark):
         arrow = {
             r["id"]: r["simhash"]
             for r in simhash_fingerprints(
-                df, "doc_id", "text", portable=portable, engine="arrow"
+                df, "doc_id", "text", portable=portable
             ).collect()
         }
-        expr = {
-            r["id"]: r["simhash"]
-            for r in simhash_fingerprints(
-                df, "doc_id", "text", portable=portable, engine="expr"
-            ).collect()
-        }
-        assert arrow == expr
+        assert arrow == _simhash_reference_frame(df, portable)
+    assert arrow[3] is None and arrow[4] == arrow[5] == (1 << 32) - 1
 
 
-def test_simhash_vote_engines_identical_real_corpus(spark):
+def test_simhash_vote_engines_identical_real_corpus(spark, documents):
     from hermes_spark.operators.dedup import simhash_fingerprints
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = simhash_fingerprints(docs, "doc_id", "text", engine="arrow")
-    e = simhash_fingerprints(docs, "doc_id", "text", engine="expr")
-    assert a.exceptAll(e).count() == 0 and e.exceptAll(a).count() == 0
+    got = {
+        r["id"]: r["simhash"]
+        for r in simhash_fingerprints(documents, "doc_id", "text").collect()
+    }
+    assert got == _simhash_reference_frame(documents, portable=True)
 
 
 def test_packed_shingles_sizes_match_string_shingles():

@@ -1,6 +1,7 @@
 """Round-9 additions: the Arrow MinHash signature kernel's
 bit-identity contract (xxh64 reference vectors, lane consistency,
-kernel-vs-expression signatures) and the oracle-window gate's
+kernel signatures vs the public ``minhash_signature`` expression, LSH
+pairs vs a plain-Python reference) and the oracle-window gate's
 one-round-only saturation-excuse rule."""
 
 import importlib.util
@@ -18,6 +19,8 @@ from hermes_spark.functions.sigkernel import (
     xxh64_np,
 )
 from hermes_spark.operators import minhash_signatures
+
+from near_dup_reference import minhash_pairs_reference
 
 # Spark-produced vectors: F.xxhash64(s) (single column, engine default
 # seed 42) — pins the byte-level XXH64 including the <32-byte tail, the
@@ -116,43 +119,57 @@ def test_arrow_lanes_agree(shingle_n, portable):
 
 @pytest.mark.parametrize("portable", [True, False])
 def test_kernel_matches_expression_signatures(spark, portable):
+    """The Arrow kernel behind ``minhash_signatures`` equals the public
+    expression ``functions.minhash_signature(shingles(text))`` for
+    every doc in MIXED, null text included."""
+    from hermes_spark.functions import minhash_signature, shingles
+
     rows = [(i, t) for i, t in enumerate(MIXED)]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     e = {
-        r["__id"]: r["__sig"]
-        for r in minhash_signatures(
-            df, "doc_id", "text", num_hashes=16, portable=portable,
-            sig_engine="expr",
+        r["doc_id"]: r["sig"]
+        for r in df.select(
+            "doc_id",
+            minhash_signature(
+                shingles(F.col("text"), n=3), num_hashes=16,
+                portable=portable,
+            ).alias("sig"),
         ).collect()
     }
     a = {
         r["__id"]: r["__sig"]
         for r in minhash_signatures(
             df, "doc_id", "text", num_hashes=16, portable=portable,
-            sig_engine="arrow",
         ).collect()
     }
     assert e == a
 
 
 def test_minhash_pairs_engines_identical(spark):
+    """Repetitive docs (seven texts, sixty ids) make every band bucket
+    hot: the operator's pairs equal the plain-Python banding reference
+    over the same signatures."""
     rows = [
         (i, ("the quick brown fox %d " % (i % 7)) * 6) for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    frames = {}
     from hermes_spark.operators import minhash_lsh_pairs
 
-    for sig_engine in ("expr", "arrow"):
-        got = minhash_lsh_pairs(
+    got = {
+        (r["id_a"], r["id_b"], r["est_jaccard"])
+        for r in minhash_lsh_pairs(
             df, "doc_id", "text", num_hashes=16, num_bands=4,
-            min_jaccard=0.5, sig_engine=sig_engine,
-        )
-        frames[sig_engine] = sorted(
-            (r["id_a"], r["id_b"], r["est_jaccard"]) for r in got.collect()
-        )
-    assert frames["expr"] == frames["arrow"]
-    assert len(frames["expr"]) > 0
+            min_jaccard=0.5,
+        ).collect()
+    }
+    sigs = {
+        r["__id"]: list(r["__sig"])
+        for r in minhash_signatures(df, "doc_id", "text").collect()
+    }
+    assert got == minhash_pairs_reference(
+        sigs, num_bands=4, max_bucket_size=1000, min_jaccard=0.5
+    )
+    assert len(got) > 0
 
 
 def _load_rotate_window():

@@ -243,65 +243,9 @@ def probe_lm_layout(spark) -> None:
              "kept": kept, "wall": round(time.time() - t0, 1)})
 
 
-def probe_sigdecomp(spark) -> None:
-    """Round 9: split the signature pipeline's wall into its expression
-    layers — shingle generation, base hashing, permutation minima —
-    each forced by an aggregate over the materialized arrays.  The
-    deltas between consecutive rows localize the CPU."""
-    from pyspark.sql import functions as F
-
-    from hermes_spark.functions.hashing import (
-        base_hash31, minhash_signature_from_hashes, shingles,
-    )
-
-    n = int(os.environ.get("STAGE_DOCS", "500000"))
-    num_hashes = int(os.environ.get("NUM_HASHES", "32"))
-    docs = corpus(spark, n)
-    docs.count()  # warm the file cache
-
-    text = F.col("text")
-    sh = shingles(text, n=3)
-    sh_nodist = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text) - 2, F.lit(1))),
-        lambda i: text.substr(i, F.lit(3)),
-    )
-    hs = F.transform(sh, lambda s: base_hash31(s, portable=False))
-    sig = minhash_signature_from_hashes(hs, num_hashes)
-
-    layers = [
-        ("scan_only", F.sum(F.length(text))),
-        ("shingles_nodistinct", F.sum(F.size(sh_nodist))),
-        ("shingles", F.sum(F.size(sh))),
-        ("shingles+hash", F.sum(F.element_at(hs, 1))),
-    ]
-    for name, agg in layers:
-        t0 = time.time()
-        docs.agg(agg.alias("v")).collect()
-        out({"probe": "sigdecomp", "layer": name, "docs": n,
-             "num_hashes": num_hashes,
-             "wall": round(time.time() - t0, 1)})
-    del sig
-    # full signatures through the OPERATOR paths (the expr path
-    # materializes __hs in its own projection — measuring the raw
-    # nested expression instead would recompute shingles+hash once per
-    # component, ~num_hashes x worse, which no operator does)
-    from hermes_spark.operators import minhash_signatures
-
-    for engine in ("expr", "arrow"):
-        t0 = time.time()
-        sigs = minhash_signatures(
-            docs, "doc_id", "text", shingle_n=3,
-            num_hashes=num_hashes, portable=False, sig_engine=engine,
-        )
-        sigs.agg(F.sum(F.element_at(F.col("__sig"), 1)).alias("v")).collect()
-        out({"probe": "sigdecomp", "layer": f"signatures[{engine}]",
-             "docs": n, "num_hashes": num_hashes,
-             "wall": round(time.time() - t0, 1)})
-
-
 PROBES = {"hist": probe_hist, "stages": probe_stages,
           "replica": probe_replica, "layout": probe_layout,
-          "lm_layout": probe_lm_layout, "sigdecomp": probe_sigdecomp}
+          "lm_layout": probe_lm_layout}
 
 
 def main() -> int:
