@@ -22,7 +22,7 @@ from __future__ import annotations
 import json
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hermes_spark.cli.parser import _args_to_map
@@ -60,11 +60,19 @@ def run_dedup(spark: SparkSession, argv: list[str]) -> tuple[DataFrame, dict]:
     elif mode != "exact":
         raise MissingArgumentException(f"unknown dedup mode: {mode}")
 
-    n1 = out.count()
+    if out_path:
+        # count the rows as the write produces them: a separate count()
+        # would run the dedup window and anti-join a second time
+        written = Observation()
+        out.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "error"
+        ).parquet(out_path)
+        n1 = written.get["rows"]
+    else:
+        n1 = out.count()
     summary = {"job": "dedup", "mode": mode, "rows_in": n0, "rows_out": n1,
                "removed": n0 - n1}
     if out_path:
-        out.write.mode("error").parquet(out_path)
         summary["out_path"] = out_path
     return out, summary
 

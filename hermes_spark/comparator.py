@@ -28,9 +28,14 @@ Two execution modes (``ComparisonConfig.mode``):
 * ``"fast"`` (default) — the plan you would actually run on 100 TB:
   a single tagged-union full-row aggregation classifies every distinct row
   as ref-only / actual-only / matched in ONE shuffle, is persisted, and
-  then feeds row counts, duplicate counts, both complement counts (one
-  metric action) and the diff join from that one materialization
-  (~2-3 Spark jobs).  Results are
+  then feeds row counts, duplicate counts, both complement counts and
+  the diff's row count (one metric action) and the diff join from that
+  one materialization.  ``compare()`` itself runs only that metric
+  action; ``result_df`` is never evaluated inside it, so the caller's
+  write is the diff's one evaluation, read from the cached
+  classification and complements.  With AQE on, a differing pair
+  measured 4 Spark jobs for ``compare()`` and 6 for the diff write
+  (a job-count budget in ``tests/test_e2e_plugins.py``).  Results are
   identical to ``"reference"`` mode (property-tested).
 * ``"auto"`` — schema-width heuristic resolves to ``"hash"`` for wide
   rows (the classification shuffle then moves ~40 bytes/row) else
@@ -57,7 +62,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructType
@@ -166,7 +171,9 @@ class DatasetComparator:
         return "hash" if width > self.config.auto_hash_row_bytes else "fast"
 
     def release(self) -> None:
-        """Unpersist any DataFrames cached by fast mode."""
+        """Unpersist the DataFrames cached by fast/hash mode.  Every
+        action on ``result_df`` recomputes the diff from these caches, so
+        call this after the last one."""
         for df in self._persisted:
             df.unpersist()
         self._persisted.clear()
@@ -343,31 +350,9 @@ class DatasetComparator:
         )
         self._persisted.append(classified)
 
-        # ALL six driver metrics in ONE action over the cached
-        # classification: the per-key rollup carries the distinct-row
-        # complement counts alongside per-key row sums, then a single
-        # global aggregation folds everything.
-        # A side's duplicate count = distinct keys with >= 2 rows on
-        # that side; a side's except count = distinct rows the other
-        # side never produced.
-        per_key = classified.groupBy(F.col(f"`{key}`")).agg(
-            F.sum(rcnt).alias(rcnt),
-            F.sum(acnt).alias(acnt),
-            F.sum(F.when(F.col(acnt) == 0, 1).otherwise(0)).alias("__refx"),
-            F.sum(F.when(F.col(rcnt) == 0, 1).otherwise(0)).alias("__actx"),
-        )
-        metrics = per_key.agg(
-            F.coalesce(F.sum(rcnt), F.lit(0)).alias("ref_rows"),
-            F.coalesce(F.sum(acnt), F.lit(0)).alias("act_rows"),
-            F.coalesce(
-                F.sum(F.when(F.col(rcnt) >= 2, 1).otherwise(0)), F.lit(0)
-            ).alias("ref_dups"),
-            F.coalesce(
-                F.sum(F.when(F.col(acnt) >= 2, 1).otherwise(0)), F.lit(0)
-            ).alias("act_dups"),
-            F.coalesce(F.sum("__refx"), F.lit(0)).alias("ref_except"),
-            F.coalesce(F.sum("__actx"), F.lit(0)).alias("act_except"),
-        ).collect()[0]
+        # ALL seven compare metrics in ONE action over the cached
+        # classification (see _metric_fold)
+        metrics = self._metric_fold(classified, key, rcnt, acnt)
         ref_count, actual_count = metrics["ref_rows"], metrics["act_rows"]
         dup_ref, dup_actual = metrics["ref_dups"], metrics["act_dups"]
         if (dup_ref + dup_actual) > 0 and not self.config.allow_duplicates:
@@ -379,15 +364,15 @@ class DatasetComparator:
         passed_count = ref_count - ref_except_count
 
         result_df = None
-        diff_count = 0
         if ref_except_count + actual_except_count > 0:
             # persist the (diff-sized) except frames: the diff dataframe
             # references each side twice (full-outer join + flattened
-            # errCol join) and is itself evaluated at least twice (the
-            # count here + the caller's write) — without this, every
-            # evaluation re-filters the wide classification cache four
-            # times (round 12; released with the classification in
-            # release()).
+            # errCol join), and without this each reference re-filters
+            # the wide classification cache (round 12; released with the
+            # classification in release()).  The diff frame itself is NOT
+            # persisted or counted here: diff_count comes from the metric
+            # fold, so the caller's first action (the write) is the only
+            # evaluation of the three joins.
             ref_except = (
                 classified.filter(F.col(acnt) == 0)
                 .select(*[F.col(f"`{c}`") for c in data_cols])
@@ -399,16 +384,9 @@ class DatasetComparator:
                 .persist()
             )
             self._persisted.extend([ref_except, actual_except])
-            # the diff frame itself is evaluated by this count AND by
-            # whatever the caller does with result_df (write, show);
-            # persisting it makes the count fill a diff-sized cache the
-            # later actions read instead of re-running the three joins
-            # (round 12; released via release() like the classification)
             result_df = self._create_diff_dataframe(
                 key, ref_except, actual_except
-            ).persist()
-            self._persisted.append(result_df)
-            diff_count = result_df.count()
+            )
         else:
             self.release()
 
@@ -420,7 +398,7 @@ class DatasetComparator:
             passed_count=passed_count,
             used_schema_selector=selector,
             result_df=result_df,
-            diff_count=diff_count,
+            diff_count=metrics["diff_rows"],
         )
 
     # ----------------------------------------------------- hash-classify
@@ -477,26 +455,9 @@ class DatasetComparator:
         )
         self._persisted.append(classified)
 
-        # same one-action metric fold as fast mode (see _compare_fast);
-        # here the per-key rollup groups (key, rowhash) classifications
-        per_key = classified.groupBy(F.col(f"`{key}`")).agg(
-            F.sum(rcnt).alias(rcnt),
-            F.sum(acnt).alias(acnt),
-            F.sum(F.when(F.col(acnt) == 0, 1).otherwise(0)).alias("__refx"),
-            F.sum(F.when(F.col(rcnt) == 0, 1).otherwise(0)).alias("__actx"),
-        )
-        metrics = per_key.agg(
-            F.coalesce(F.sum(rcnt), F.lit(0)).alias("ref_rows"),
-            F.coalesce(F.sum(acnt), F.lit(0)).alias("act_rows"),
-            F.coalesce(
-                F.sum(F.when(F.col(rcnt) >= 2, 1).otherwise(0)), F.lit(0)
-            ).alias("ref_dups"),
-            F.coalesce(
-                F.sum(F.when(F.col(acnt) >= 2, 1).otherwise(0)), F.lit(0)
-            ).alias("act_dups"),
-            F.coalesce(F.sum("__refx"), F.lit(0)).alias("ref_except"),
-            F.coalesce(F.sum("__actx"), F.lit(0)).alias("act_except"),
-        ).collect()[0]
+        # same one-action metric fold as fast mode; here the per-key
+        # rollup groups (key, rowhash) classifications
+        metrics = self._metric_fold(classified, key, rcnt, acnt)
         ref_count, actual_count = metrics["ref_rows"], metrics["act_rows"]
         dup_ref, dup_actual = metrics["ref_dups"], metrics["act_dups"]
         if (dup_ref + dup_actual) > 0 and not self.config.allow_duplicates:
@@ -508,7 +469,6 @@ class DatasetComparator:
         passed_count = ref_count - ref_except_count
 
         result_df = None
-        diff_count = 0
         if ref_except_count + actual_except_count > 0:
             # pull back ONLY the unmatched rows; broadcast the (key, hash)
             # sets when small enough, else let AQE pick the join
@@ -535,19 +495,14 @@ class DatasetComparator:
             # already computes the identical semi-join/distinct subtrees
             # once per action, and a persist() boundary here measured
             # ~2.4 s SLOWER at sf0.1 (cache materialization of wide rows
-            # beats the reused-exchange rescan it saves)
+            # beats the reused-exchange rescan it saves).  Nor is the diff
+            # frame: diff_count comes from the metric fold, so the
+            # caller's first action is the only evaluation.
             ref_except = rematerialize(keyed_ref, acnt)
             actual_except = rematerialize(keyed_actual, rcnt)
-            # persist the FINAL diff frame only (round-12 A/B): the
-            # count below fills a diff-sized cache that the caller's
-            # write/show reads, skipping a second full rematerialize +
-            # three-join pass — while per-side except persists measured
-            # SLOWER (they defeat ReuseExchange within the first action)
             result_df = self._create_diff_dataframe(
                 key, ref_except, actual_except
-            ).persist()
-            self._persisted.append(result_df)
-            diff_count = result_df.count()
+            )
         else:
             self.release()
 
@@ -559,10 +514,53 @@ class DatasetComparator:
             passed_count=passed_count,
             used_schema_selector=selector,
             result_df=result_df,
-            diff_count=diff_count,
+            diff_count=metrics["diff_rows"],
         )
 
     # ------------------------------------------------------------ helpers
+
+    @staticmethod
+    def _metric_fold(
+        classified: DataFrame, key: str, rcnt: str, acnt: str
+    ) -> Row:
+        """All seven metrics of a fast/hash compare in ONE action
+        over the cached classification (one row per distinct row, or per
+        ``(key, rowhash)`` in hash mode, with its per-side counts).
+
+        The per-key rollup carries the distinct-row complement counts
+        alongside per-key row sums, then a single global aggregation
+        folds everything.  A side's duplicate count = distinct keys with
+        >= 2 rows on that side; a side's except count = distinct rows the
+        other side never produced.  ``diff_rows`` is the row count of the
+        diff frame: with ``r``/``a`` a key's ref-only/actual-only
+        distinct rows, its full-outer join holds ``n = r*a`` rows when
+        both are > 0 (else ``r + a``), and the inner join with its
+        flattened twin on the key squares that, so the frame holds
+        ``sum(n*n)`` rows — no evaluation of the diff needed.
+        """
+        per_key = classified.groupBy(F.col(f"`{key}`")).agg(
+            F.sum(rcnt).alias(rcnt),
+            F.sum(acnt).alias(acnt),
+            F.sum(F.when(F.col(acnt) == 0, 1).otherwise(0)).alias("__refx"),
+            F.sum(F.when(F.col(rcnt) == 0, 1).otherwise(0)).alias("__actx"),
+        )
+        refx, actx = F.col("__refx"), F.col("__actx")
+        joined_rows = F.when((refx > 0) & (actx > 0), refx * actx).otherwise(
+            refx + actx
+        )
+
+        def total(c: Column) -> Column:
+            return F.coalesce(F.sum(c), F.lit(0))
+
+        return per_key.agg(
+            total(F.col(rcnt)).alias("ref_rows"),
+            total(F.col(acnt)).alias("act_rows"),
+            total(F.when(F.col(rcnt) >= 2, 1).otherwise(0)).alias("ref_dups"),
+            total(F.when(F.col(acnt) >= 2, 1).otherwise(0)).alias("act_dups"),
+            total(refx).alias("ref_except"),
+            total(actx).alias("act_except"),
+            total(joined_rows * joined_rows).alias("diff_rows"),
+        ).collect()[0]
 
     def _check_schemas(self) -> None:
         expected = strip_metadata(self.ref.schema)
@@ -675,11 +673,12 @@ def compare(
     (cf. reference usage ``DatasetComparator.scala:41-46`` /
     ``plugins/DatasetComparisonPlugin.scala:84-104``).
 
-    Note: fast/hash modes persist an intermediate the returned
-    ``result_df`` depends on. When you are done with ``result_df``,
-    call ``result.release()`` to free the executor storage (the CLI
-    job and plugins do; equivalent to
-    :meth:`DatasetComparator.release` on the producing instance)."""
+    Note: fast/hash modes persist the intermediates the returned
+    ``result_df`` is computed from (each action on it re-runs the diff
+    joins over them). After the last action on ``result_df``, call
+    ``result.release()`` to free the executor storage (the CLI job and
+    plugins do; equivalent to :meth:`DatasetComparator.release` on the
+    producing instance)."""
     return DatasetComparator(
         ref, actual, keys=keys, config=config, optional_schema=schema,
         safe_key_hash=safe_key_hash,

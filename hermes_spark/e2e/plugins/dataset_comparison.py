@@ -3,7 +3,9 @@
 Mirrors ``e2eRunner/.../plugins/DatasetComparisonPlugin.scala:76-106``:
 args are the compare job's CLI options (without an output sink); the
 step passes iff the datasets match; ``write(writeArgs)`` writes the diff
-DataFrame and `_METRICS` using writer CLI options.
+DataFrame and `_METRICS` using writer CLI options.  A step with
+``writeArgs`` keeps the comparator's caches until that write, so the
+diff is computed once, by the write, from the cached classification.
 """
 
 from __future__ import annotations
@@ -46,16 +48,23 @@ class DatasetComparisonResult(PluginResult):
     comparison: Optional[ComparisonResult] = field(default=None)
 
     def write(self, write_args: tuple[str, ...]) -> None:
-        params = _parse_output_parameters(write_args)
-        spark = SparkSession.builder.getOrCreate()
-        out_path = get_unique_file_path(spark, params.path)
-        if self.comparison is not None and self.comparison.result_df is not None:
-            write_dataframe(
-                self.comparison.result_df,
-                Parameters(params.format, params.options, out_path),
-            )
-        if self.comparison is not None:
-            write_metrics_file(spark, out_path, self.comparison.get_pretty_json())
+        """Write the diff and ``_METRICS``, then free the comparator's
+        caches: the diff is computed by this write, from the caches the
+        compare left in place."""
+        try:
+            params = _parse_output_parameters(write_args)
+            spark = SparkSession.builder.getOrCreate()
+            out_path = get_unique_file_path(spark, params.path)
+            if self.comparison is not None and self.comparison.result_df is not None:
+                write_dataframe(
+                    self.comparison.result_df,
+                    Parameters(params.format, params.options, out_path),
+                )
+            if self.comparison is not None:
+                write_metrics_file(spark, out_path, self.comparison.get_pretty_json())
+        finally:
+            if self.comparison is not None:
+                self.comparison.release()
 
     def result_log(self) -> str:
         state = "passed" if self.passed else "FAILED"
@@ -78,7 +87,9 @@ class DatasetComparisonPlugin(Plugin):
         comparator = DatasetComparator(ref_df, actual_df, keys=cli.keys)
         result = comparator.compare()
         result.passed_options = cli.raw_options
-        comparator.release()
+        if test_definition.write_args is None:
+            # no write follows: nothing will read result_df's caches
+            comparator.release()
         return DatasetComparisonResult(
             arguments=test_definition.args,
             returned_value=result.get_json_metadata(),

@@ -304,9 +304,13 @@ def minhash_lsh_pairs(
 
     df = rebalance_for_cpu(df)
 
+    # null text has an all-null signature: every band key of two such
+    # docs is equal, so they would pair at est_jaccard 1.0 — drop them
+    # before banding, as fingerprint_near_dup_pairs drops null
+    # fingerprints
     sigs = minhash_signatures(
-        df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes,
-        portable=portable,
+        df.filter(F.col(text_col).isNotNull()), id_col, text_col,
+        shingle_n=shingle_n, num_hashes=num_hashes, portable=portable,
     )
 
     buckets = sigs.select(
@@ -1532,9 +1536,11 @@ def dedup_against(
     if keep_policy not in ("component", "greedy"):
         raise ValueError(f"keep_policy must be 'component' or 'greedy', got {keep_policy!r}")
     rows_per_band = num_hashes // num_bands
+    # null-text docs get no band rows (see minhash_lsh_pairs): they
+    # match nothing, always survive and never enter the store
     banded = minhash_signatures(
-        new_docs, id_col, text_col, shingle_n=3, num_hashes=num_hashes,
-        portable=portable,
+        new_docs.filter(F.col(text_col).isNotNull()), id_col, text_col,
+        shingle_n=3, num_hashes=num_hashes, portable=portable,
     ).select(
         "__id",
         "__sig",

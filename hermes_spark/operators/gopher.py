@@ -65,7 +65,7 @@ BULLET_PREFIXES = ("- ", "* ", "•")
 
 
 def _make_kernel_tokenizer(script_aware: bool):
-    """Tokenizer shared by BOTH repetition-kernel engines (hoisted in
+    r"""Tokenizer shared by BOTH repetition-kernel engines (hoisted in
     r12 so the script-aware switch cannot drift between them): Spark's
     trim-then-\s+ split, with unsegmented-script docs (ratio >=
     SCRIPT_MIN_RATIO, mirroring the gates' switch) char-tokenized

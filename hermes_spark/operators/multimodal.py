@@ -413,6 +413,19 @@ def image_near_dup_pairs(
     )
 
 
+def _check_aligned(bucket: int, vids, frames, fps) -> None:
+    """Raise ``ValueError`` unless one gathered bucket's video-id,
+    frame-index and fingerprint lists have equal lengths: the pair
+    kernel pairs on position, so a misaligned bucket would give a frame
+    another member's fingerprint."""
+    if not len(vids) == len(frames) == len(fps):
+        raise ValueError(
+            f"misaligned bucket lists: bucket {bucket} has {len(vids)} "
+            f"video ids, {len(frames)} frame indices and {len(fps)} "
+            "fingerprints"
+        )
+
+
 def video_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -559,14 +572,14 @@ def video_near_dup_pairs(
     def pair_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             parts = {"id_a": [], "id_b": [], "frame_a": [], "frame_b": []}
-            for vids_cell, frames_cell, fps_cell in zip(
-                pdf["__vids"], pdf["__frames"], pdf["__fps"]
+            for bucket, (vids_cell, frames_cell, fps_cell) in enumerate(
+                zip(pdf["__vids"], pdf["__frames"], pdf["__fps"])
             ):
                 # the collect_lists fill in one aggregation pass, so
                 # index i of all three comes from the same input row;
                 # pair on POSITION, then key the hamming hits back to
                 # (video, frame) and drop same-video hits
-                assert len(vids_cell) == len(fps_cell)
+                _check_aligned(bucket, vids_cell, frames_cell, fps_cell)
                 f = np.asarray(fps_cell, dtype=np.int64)
                 vids = np.asarray(vids_cell)
                 frames_arr = np.asarray(frames_cell, dtype=np.int64)

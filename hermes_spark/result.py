@@ -30,11 +30,13 @@ class ComparisonResult:
     passed_options: str = ""
     additional_info: dict[str, str] = field(default_factory=dict)
     #: set by DatasetComparator: frees the executor-storage caches
-    #: ``result_df`` reads from (fast/hash modes persist the
-    #: classification and diff frames).  Call :meth:`release` when done
-    #: with ``result_df`` — especially through the module-level
-    #: ``compare()`` convenience function, where the comparator instance
-    #: (and its ``release()``) is otherwise unreachable.
+    #: ``result_df`` is computed from (fast/hash modes persist the
+    #: classification; fast mode also the two complements).  Each action
+    #: on ``result_df`` computes the diff from them, so call
+    #: :meth:`release` after the last one — especially through the
+    #: module-level ``compare()`` convenience function, where the
+    #: comparator instance (and its ``release()``) is otherwise
+    #: unreachable.
     _releaser: Optional[Callable[[], None]] = field(
         default=None, repr=False, compare=False
     )

@@ -226,8 +226,11 @@ def stream_minhash_dedup(
         from ..operators.dedup import minhash_signatures
 
         rows_per_band = num_hashes // num_bands
+        # null text gets no band rows (see operators.dedup.dedup_against)
         sigs = minhash_signatures(
-            df.select(F.col(id_col), F.col(text_col)),
+            df.select(F.col(id_col), F.col(text_col)).filter(
+                F.col(text_col).isNotNull()
+            ),
             id_col, text_col,
             shingle_n=shingle_n, num_hashes=num_hashes,
             portable=True,

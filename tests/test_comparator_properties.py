@@ -45,6 +45,10 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, _SCHEMA)
 
 
+def _diff_rows(res):
+    return res.result_df.count() if res.result_df is not None else 0
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -86,6 +90,10 @@ def test_modes_agree_on_arbitrary_inputs(spark, ref_rows, act_rows):
             res.passed_count,
             res.diff_count,
         )
+        if mode != "reference":
+            # fast/hash take diff_count from the metric fold, not from
+            # evaluating the diff frame
+            assert res.diff_count == _diff_rows(res), mode
         cmp.release()
     assert outcomes["reference"] == outcomes["fast"] == outcomes["hash"], outcomes
 
@@ -95,3 +103,39 @@ def test_modes_agree_on_arbitrary_inputs(spark, ref_rows, act_rows):
     expect_pass = ref_distinct <= act_distinct and act_distinct <= ref_distinct
     assert (outcomes["fast"][5] == 0) == expect_pass
     assert outcomes["fast"][4] == len(ref_rows) - len(ref_distinct - act_distinct)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    ref_rows=_rows,
+    act_rows=_rows,
+    keys=st.sampled_from([("k",), ("k", "x")]),
+)
+def test_diff_count_is_diff_frame_rows_with_duplicate_keys(
+    spark, ref_rows, act_rows, keys
+):
+    """With keys, several distinct rows can share a key on each side, so
+    the diff frame's full-outer + flattened-twin joins multiply rows per
+    key (``n*n`` with ``n = r*a`` or ``r + a``).  The metric fold's
+    ``diff_count`` must still equal the rows the diff frame holds, and
+    the reference mode's count of them."""
+    ref_rows, act_rows = _norm(ref_rows), _norm(act_rows)
+    ref, act = _df(spark, ref_rows), _df(spark, act_rows)
+    counts = {}
+    for mode in ("reference", "fast", "hash"):
+        cmp = DatasetComparator(
+            ref, act, keys=keys,
+            config=ComparisonConfig(mode=mode, allow_duplicates=True),
+        )
+        res = cmp.compare()
+        counts[mode] = (res.diff_count, _diff_rows(res))
+        cmp.release()
+    assert counts["fast"][0] == counts["fast"][1], counts
+    assert counts["hash"][0] == counts["hash"][1], counts
+    assert (
+        counts["reference"][0] == counts["fast"][0] == counts["hash"][0]
+    ), counts

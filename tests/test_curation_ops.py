@@ -129,3 +129,23 @@ def test_cli_dedup_and_split_jobs(spark, tmp_path):
         spark, ["--format", "parquet", "--path", src, "--mode", "fuzzy"]
     )
     assert summary3["rows_out"] <= 50
+
+
+def test_cli_dedup_rows_out_counts_the_written_output(spark, tmp_path):
+    """With --out-path, rows_out is observed on the write itself (no
+    separate count job); it equals the written parquet's row count and
+    the rows_out of a run without an output path."""
+    from hermes_spark.cli.curate_job import run_dedup
+
+    src = str(tmp_path / "docs")
+    rows = [(i, "text %d" % (i % 50), "s%d" % (i % 3)) for i in range(200)]
+    docs(spark, rows).write.parquet(src)
+    for mode in ("exact", "fuzzy"):
+        read = ["--format", "parquet", "--path", src, "--mode", mode]
+        out_path = str(tmp_path / f"out_{mode}")
+        _, summary = run_dedup(spark, read + ["--out-path", out_path])
+        _, unwritten = run_dedup(spark, read)
+        assert summary["out_path"] == out_path
+        assert summary["rows_out"] == spark.read.parquet(out_path).count()
+        assert summary["rows_out"] == unwritten["rows_out"]
+        assert summary["removed"] == 200 - summary["rows_out"]

@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from hermes_spark.operators import (
@@ -377,6 +379,61 @@ def test_dedup_against_history_and_batch(spark):
     assert ids2 == [11]  # 10 matched history via the store, never re-hashed corpus
     # store layout is streaming-compatible
     assert store2.columns == ["__band", "__id", "__sig"]
+
+
+@contextmanager
+def _no_worker_runtime_warnings(spark):
+    """Python workers started inside this block turn RuntimeWarning into
+    an error, so a numpy cast warning in a kernel fails the job.  The
+    worker environment keys the worker pool, so Python UDFs built inside
+    the block get workers of their own."""
+    env = spark.sparkContext.environment
+    env["PYTHONWARNINGS"] = "error::RuntimeWarning"
+    try:
+        yield
+    finally:
+        del env["PYTHONWARNINGS"]
+
+
+def _null_text_docs(spark):
+    return docs(spark).unionByName(
+        spark.createDataFrame([(6, None), (7, None)], "doc_id int, text string")
+    )
+
+
+def test_minhash_pairs_skip_null_text(spark):
+    """Null text has an all-null signature whose band keys all agree:
+    two such docs used to pair at est_jaccard 1.0, with a numpy
+    invalid-cast warning in the pair kernel.  They now give no pair and
+    no warning, and the pairs among the other docs are unchanged."""
+    with _no_worker_runtime_warnings(spark):
+        for min_jaccard in (0.0, 0.5):
+            got = minhash_lsh_pairs(
+                _null_text_docs(spark), "doc_id", "text", min_jaccard=min_jaccard
+            ).collect()
+            want = minhash_lsh_pairs(
+                docs(spark), "doc_id", "text", min_jaccard=min_jaccard
+            ).collect()
+            assert want
+            assert sorted(got) == sorted(want)
+
+
+def test_dedup_against_keeps_null_text_out_of_bands(spark):
+    """dedup_against bands the same signatures: null-text docs match
+    nothing, all survive, and never enter the store."""
+    from hermes_spark.operators.dedup import dedup_against
+
+    empty_store = spark.createDataFrame(
+        [], "__band string, __id long, __sig array<bigint>"
+    )
+    batch = _null_text_docs(spark).withColumn("doc_id", F.col("doc_id").cast("long"))
+    with _no_worker_runtime_warnings(spark):
+        surv, store = dedup_against(batch, empty_store, "doc_id", "text")
+        ids = {r["doc_id"] for r in surv.collect()}
+        stored = {r["__id"] for r in store.select("__id").distinct().collect()}
+    assert {6, 7} <= ids
+    assert not stored & {6, 7}
+    assert stored == ids - {6, 7}
 
 
 def test_dedup_against_component_keeps_representative(spark):

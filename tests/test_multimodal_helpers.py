@@ -123,3 +123,19 @@ def test_extract_audio_features_stub(media_df):
     assert by_id[2].decode_error is None and by_id[2].duration_ms == 0
     # null bytes produce a decode_error row, never a job failure
     assert by_id[3].decode_error is not None and by_id[3].sample_rate is None
+
+
+def test_video_pair_kernel_rejects_misaligned_lists():
+    """The video pair kernel pairs each gathered bucket's three lists by
+    position; lists of unequal length raise with the bucket and all
+    three lengths instead of mis-pairing frames and fingerprints."""
+    from hermes_spark.operators.multimodal import _check_aligned
+
+    _check_aligned(0, [1, 2], [0, 4], [10, 20])
+    for frames, fps in (([0], [10, 20]), ([0, 4], [10]), ([0, 4, 8], [10, 20])):
+        with pytest.raises(ValueError) as err:
+            _check_aligned(3, [1, 2], frames, fps)
+        assert str(err.value) == (
+            f"misaligned bucket lists: bucket 3 has 2 video ids, "
+            f"{len(frames)} frame indices and {len(fps)} fingerprints"
+        )
