@@ -32,6 +32,8 @@ class UndefinedVariablesInTestDefinitionJson(Exception):
 
 
 class TestDefinitionDependenciesOutOfOrder(Exception):
+    __test__ = False  # a library class, not a pytest test class
+
     def __init__(self, names: list[str]) -> None:
         self.names = names
         super().__init__(
@@ -79,6 +81,8 @@ class TestDefinitionWithOrder:
 
 @dataclass
 class TestDefinitions:
+    __test__ = False  # a library class, not a pytest test class
+
     definitions: list[TestDefinition] = field(default_factory=list)
 
     # -------------------------------------------------------------- parse

@@ -30,6 +30,8 @@ class DependeeFailed(Exception):
 
 
 class TestFailedWithFailFastOn(Exception):
+    __test__ = False  # a library class, not a pytest test class
+
     def __init__(self, test_name: str) -> None:
         super().__init__(
             f"Test {test_name} failed and fail-fast is on. Aborting."

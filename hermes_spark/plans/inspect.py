@@ -122,6 +122,14 @@ def rebalance_for_cpu(
     pass through untouched, so zero-shuffle plan contracts stay
     intact; when it does engage, one round-robin exchange of the
     projected columns buys every core back.
+
+    The checks run cheapest first: the input file list and their sizes
+    are filesystem metadata, while the planned partition count needs
+    ``df.rdd`` — and under AQE ``df.rdd`` executes the plan's query
+    stages (every shuffle upstream of the result) just to plan the
+    final one.  An input under ``min_bytes`` therefore returns before
+    ``df.rdd`` is touched and runs no job; only a big input pays for
+    the partition count.
     """
     try:
         sc = df.sparkSession.sparkContext
@@ -129,11 +137,11 @@ def rebalance_for_cpu(
         files = df.inputFiles()
         if not files:
             return df
-        parallelism = min(df.rdd.getNumPartitions(), len(files))
-        if parallelism >= cores * factor:
-            return df
         size = input_size_bytes(df)
         if size < min_bytes:
+            return df
+        parallelism = min(df.rdd.getNumPartitions(), len(files))
+        if parallelism >= cores * factor:
             return df
     except Exception:
         # stats unavailable (exotic source/plan): never block the query

@@ -70,6 +70,55 @@ def test_simhash_near_dups(spark):
     assert (1, 4) in pairs or (2, 4) in pairs
 
 
+def _shingle_set(text, n=3):
+    return {text[:n]} if len(text) <= n else {
+        text[i:i + n] for i in range(len(text) - n + 1)
+    }
+
+
+def test_ngram_jaccard_runs_shingle_kernel_once(spark, monkeypatch):
+    """Both join sides read one materialization of the shingles: the
+    Arrow shingle kernel sees each input batch once per call (it ran
+    once per side), and the pairs equal a plain-Python Jaccard."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumped over the lazy dogs",
+        "a quick brown fox jumps over a lazy dog",
+        "completely different content about spark engines",
+        "spark engines shuffle partitions",
+        "fox",
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).coalesce(1)  # one input partition: one Arrow batch per kernel pass
+    batches = spark.sparkContext.accumulator(0)
+    map_in_arrow = type(df).mapInArrow
+
+    def counting_map_in_arrow(self, func, schema, *args, **kwargs):
+        def counted(iterator):
+            for batch in func(iterator):
+                batches.add(1)
+                yield batch
+
+        return map_in_arrow(self, counted, schema, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "mapInArrow", counting_map_in_arrow)
+    rows = ngram_jaccard_pairs(df, "doc_id", "text", min_jaccard=0.3).collect()
+    assert batches.value == 1
+
+    want = {}
+    for a, ta in enumerate(texts):
+        for b, tb in enumerate(texts):
+            sa, sb = _shingle_set(ta), _shingle_set(tb)
+            jac = len(sa & sb) / max(len(sa | sb), 1)
+            if a < b and jac >= 0.3:
+                want[(a, b)] = jac
+    got = {(r.id_a, r.id_b): r.jaccard for r in rows}
+    assert set(got) == set(want)
+    assert all(abs(got[k] - want[k]) < 1e-6 for k in want)
+
+
 def test_connected_components_basic(spark):
     from hermes_spark.operators import connected_components
 
@@ -274,6 +323,16 @@ def _union_find_components(edges):
     return {x: find(x) for x in parent}
 
 
+def _cc_expected(edges):
+    """Union-find reference for both algorithms: pairs with a null
+    endpoint are dropped; the star variant also drops nodes seen only in
+    self pairs ``(a, a)``."""
+    kept = [(a, b) for a, b in edges if a is not None and b is not None]
+    label = set(_union_find_components(kept).items())
+    linked = {x for a, b in kept if a != b for x in (a, b)}
+    return label, {(n, c) for n, c in label if n in linked}
+
+
 @settings(
     max_examples=6,
     deadline=None,
@@ -286,20 +345,131 @@ def test_cc_algorithms_match_union_find(spark, edges):
         connected_components_star,
     )
 
-    oracle = _union_find_components(edges)
-    pairs = spark.createDataFrame(edges, "id_a int, id_b int") if edges else None
-    if pairs is None:
-        return
+    pairs = spark.createDataFrame(edges, "id_a int, id_b int")
+    label_expected, star_expected = _cc_expected(edges)
     lp = {(r.id, r.component) for r in connected_components(pairs).collect()}
-    assert lp == set(oracle.items())
-    # star drops nodes only ever seen in self-loops
-    non_self = {x for a, b in edges if a != b for x in (a, b)}
-    star_expected = {(n, c) for n, c in oracle.items() if n in non_self}
+    assert lp == label_expected
     star = {
         (r.id, r.component)
         for r in connected_components_star(pairs).collect()
     }
     assert star == star_expected
+
+
+def test_cc_algorithms_match_union_find_on_planted_shapes(spark):
+    """Both clustering algorithms against the union-find reference on
+    seeded random graphs, a 200-node chain (the minimum id at one end),
+    a star, duplicate/reversed/self pairs, and string ids with null
+    endpoints (empty pair lists: the hypothesis test above and the
+    no-blocking test below)."""
+    import random
+
+    from hermes_spark.operators import (
+        connected_components,
+        connected_components_star,
+    )
+
+    rng = random.Random(301)
+    random_graphs = [
+        (off + rng.randrange(n), off + rng.randrange(n))
+        for off, n, m in ((0, 120, 90), (200, 60, 150))
+        for _ in range(m)
+    ]
+    chain = [(1000 + i + 1, 1000 + i) for i in range(199)]  # 200 nodes
+    star = [(2000, 2000 + i) for i in range(1, 40)]
+    repeats = [
+        (3001, 3002), (3002, 3001), (3001, 3002),  # duplicate + reversed
+        (3003, 3003), (3003, 3004), (3005, 3005),  # self pairs
+    ]
+    strings = [
+        ("m", "k"), ("k", "z"), ("z", "m"), ("b", "a"), ("s", "s"),
+        ("q", None), (None, "a"), (None, None),  # dropped
+    ]
+    cases = [
+        (random_graphs + chain + star + repeats, "id_a long, id_b long"),
+        (strings, "id_a string, id_b string"),
+    ]
+    for edges, schema in cases:
+        pairs = spark.createDataFrame(edges, schema)
+        want_label, want_star = _cc_expected(edges)
+        label = {
+            (r.id, r.component)
+            for r in connected_components(pairs).collect()
+        }
+        assert label == want_label, schema
+        star_rows = {
+            (r.id, r.component)
+            for r in connected_components_star(pairs).collect()
+        }
+        assert star_rows == want_star, schema
+
+
+def test_cc_empty_pairs_return_without_blocking(spark):
+    """Convergence is read from an ``Observation`` on each round's
+    checkpoint; on an empty graph (no pairs, or only null endpoints)
+    that observation must still complete, so both algorithms return an
+    empty frame (label propagation after one round) instead of waiting
+    forever."""
+    import threading
+
+    from hermes_spark.operators import (
+        connected_components,
+        connected_components_star,
+    )
+
+    results = {}
+
+    def run():
+        for name, rows in (("empty", []), ("nulls", [(None, 1), (2, None)])):
+            pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+            label_stats, star_stats = {}, {}
+            results[name] = (
+                connected_components(pairs, stats=label_stats).collect(),
+                label_stats,
+                connected_components_star(pairs, stats=star_stats).collect(),
+                star_stats["final_edges"],
+            )
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "connected components blocked on an empty graph"
+    for name in ("empty", "nulls"):
+        assert results[name] == ([], {"rounds": 1}, [], 0), name
+
+
+#: Spark jobs of ``connected_components`` on the 3-round graph below, in
+#: this suite's session (AQE on, 8 shuffle partitions): 2 to build and
+#: checkpoint the edges, 3 for round 1 (its aggregate, the pointer jump
+#: and the checkpoint) and 6 for each later round (the edge and label
+#: shuffles of the neighbour-min join, its aggregate, the second copy
+#: of that aggregate in the pointer jump, the jump's shuffle and the
+#: checkpoint).  Convergence costs no job of its own.
+CONNECTED_COMPONENTS_JOB_BUDGET = 17
+
+
+def test_connected_components_job_budget(spark):
+    import uuid
+
+    from hermes_spark.operators import connected_components
+
+    # 40 disjoint 5-node paths with interleaved ids: 3 rounds
+    edges = [(c + 100 * i, c + 100 * (i + 1)) for c in range(40) for i in range(4)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    sc = spark.sparkContext
+    group = f"cc-budget-{uuid.uuid4().hex}"
+    stats = {}
+    sc.setJobGroup(group, "connected components")
+    try:
+        labels = connected_components(pairs, stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert stats["rounds"] == 3
+    assert len(jobs) <= CONNECTED_COMPONENTS_JOB_BUDGET, sorted(jobs)
+    got = {(r.id, r.component) for r in labels.collect()}
+    assert got == set(_union_find_components(edges).items())
 
 
 def test_simhash_fast_hash_variant(spark, documents):

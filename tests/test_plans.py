@@ -363,6 +363,33 @@ def test_rebalance_for_cpu_no_ops(spark, sf_dir, tmp_path):
     assert rebalance_for_cpu(docs) is docs
 
 
+def test_rebalance_for_cpu_runs_no_job_under_the_floor(spark, tmp_path):
+    """The size check reads filesystem metadata only; the partition
+    count needs ``df.rdd``, which under AQE runs the upstream shuffles
+    (here the exact-dedup window's exchange).  An input under
+    ``min_bytes`` must return before that: no job, same frame."""
+    import uuid
+
+    from hermes_spark.operators import exact_dedup
+    from hermes_spark.plans import rebalance_for_cpu
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"document {i % 7}") for i in range(40)], "doc_id long, text string"
+    ).write.parquet(path)
+    deduped = exact_dedup(spark.read.parquet(path), "doc_id", text_col="text")
+    sc = spark.sparkContext
+    group = f"rebalance-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "rebalance_for_cpu under the size floor")
+    try:
+        out = rebalance_for_cpu(deduped)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out is deduped
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_rebalance_for_cpu_engages_on_narrow_large(spark, sf_dir, tmp_path):
     from hermes_spark.plans import count_exchanges, rebalance_for_cpu
 
