@@ -44,3 +44,12 @@ def documents(spark, sf_dir):
 @pytest.fixture(scope="session")
 def embeddings(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+@pytest.fixture
+def distributed_cc(monkeypatch):
+    """Connected components without the driver finish: every graph runs
+    the distributed rounds."""
+    from hermes_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)

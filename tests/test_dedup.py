@@ -1,5 +1,6 @@
 from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
 from hermes_spark.operators import (
@@ -131,7 +132,7 @@ def test_connected_components_basic(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (9, 1), (5, 5), (6, 5)}
 
 
-def test_connected_components_chain_converges(spark):
+def test_connected_components_chain_converges(spark, distributed_cc):
     """A long path graph needs diameter rounds — pins the iteration loop."""
     from hermes_spark.operators import connected_components
 
@@ -258,7 +259,7 @@ def test_star_components_match_label_propagation(spark):
         assert star == lp, edges
 
 
-def test_star_components_converges_fast_on_chain(spark):
+def test_star_components_converges_fast_on_chain(spark, distributed_cc):
     """O(log^2 n) rounds: a 64-node path must finish well under the
     diameter-many rounds label propagation would need."""
     from hermes_spark.operators import connected_components_star
@@ -333,13 +334,7 @@ def _cc_expected(edges):
     return label, {(n, c) for n, c in label if n in linked}
 
 
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(edges=_edges_strategy)
-def test_cc_algorithms_match_union_find(spark, edges):
+def _assert_cc_match_union_find(spark, edges):
     from hermes_spark.operators import (
         connected_components,
         connected_components_star,
@@ -354,6 +349,28 @@ def test_cc_algorithms_match_union_find(spark, edges):
         for r in connected_components_star(pairs).collect()
     }
     assert star == star_expected
+
+
+# The clustering tests below run twice: on the default path (graphs this
+# small finish on the driver) and, under ``distributed_cc``, on the
+# distributed rounds.
+_cc_settings = settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@_cc_settings
+@given(edges=_edges_strategy)
+def test_cc_algorithms_match_union_find(spark, edges):
+    _assert_cc_match_union_find(spark, edges)
+
+
+@_cc_settings
+@given(edges=_edges_strategy)
+def test_cc_distributed_rounds_match_union_find(spark, distributed_cc, edges):
+    _assert_cc_match_union_find(spark, edges)
 
 
 def test_cc_algorithms_match_union_find_on_planted_shapes(spark):
@@ -404,12 +421,19 @@ def test_cc_algorithms_match_union_find_on_planted_shapes(spark):
         assert star_rows == want_star, schema
 
 
+def test_cc_distributed_rounds_match_union_find_on_planted_shapes(
+    spark, distributed_cc
+):
+    test_cc_algorithms_match_union_find_on_planted_shapes(spark)
+
+
 def test_cc_empty_pairs_return_without_blocking(spark):
-    """Convergence is read from an ``Observation`` on each round's
-    checkpoint; on an empty graph (no pairs, or only null endpoints)
-    that observation must still complete, so both algorithms return an
+    """The edge count and convergence are read from ``Observation``s on
+    checkpoints; on an empty graph (no pairs, or only null endpoints)
+    those observations must still complete, so both algorithms return an
     empty frame (label propagation after one round) instead of waiting
-    forever."""
+    forever.  An empty graph never takes the driver finish, so this one
+    test covers the distributed path too."""
     import threading
 
     from hermes_spark.operators import (
@@ -435,41 +459,203 @@ def test_cc_empty_pairs_return_without_blocking(spark):
     worker.join(timeout=300)
     assert not worker.is_alive(), "connected components blocked on an empty graph"
     for name in ("empty", "nulls"):
-        assert results[name] == ([], {"rounds": 1}, [], 0), name
+        assert results[name] == (
+            [], {"rounds": 1, "driver_finish": False}, [], 0
+        ), name
 
 
-#: Spark jobs of ``connected_components`` on the 3-round graph below, in
-#: this suite's session (AQE on, 8 shuffle partitions): 2 to build and
-#: checkpoint the edges, 3 for round 1 (its aggregate, the pointer jump
-#: and the checkpoint) and 6 for each later round (the edge and label
-#: shuffles of the neighbour-min join, its aggregate, the second copy
-#: of that aggregate in the pointer jump, the jump's shuffle and the
-#: checkpoint).  Convergence costs no job of its own.
-CONNECTED_COMPONENTS_JOB_BUDGET = 17
-
-
-def test_connected_components_job_budget(spark):
+def _job_ids(spark, action):
+    """Result of ``action()`` and the ids of the Spark jobs it ran."""
     import uuid
 
-    from hermes_spark.operators import connected_components
-
-    # 40 disjoint 5-node paths with interleaved ids: 3 rounds
-    edges = [(c + 100 * i, c + 100 * (i + 1)) for c in range(40) for i in range(4)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     sc = spark.sparkContext
     group = f"cc-budget-{uuid.uuid4().hex}"
-    stats = {}
     sc.setJobGroup(group, "connected components")
     try:
-        labels = connected_components(pairs, stats=stats)
+        result = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: 40 disjoint 5-node paths with interleaved ids: 3 distributed rounds
+_BUDGET_EDGES = [
+    (c + 100 * i, c + 100 * (i + 1)) for c in range(40) for i in range(4)
+]
+
+#: Spark jobs of ``connected_components``' distributed rounds on the
+#: 3-round graph above, in this suite's session (AQE on, 8 shuffle
+#: partitions): 2 to build and checkpoint the edges, 3 for round 1 (its
+#: aggregate, the pointer jump and the checkpoint) and 6 for each later
+#: round (the edge and label shuffles of the neighbour-min join, its
+#: aggregate, the second copy of that aggregate in the pointer jump, the
+#: jump's shuffle and the checkpoint).  Convergence costs no job of its
+#: own.
+CONNECTED_COMPONENTS_JOB_BUDGET = 17
+
+#: Spark jobs of either algorithm's driver finish on the same graph: 2
+#: to build, count and checkpoint the edges, 1 to collect them as Arrow.
+DRIVER_FINISH_JOB_BUDGET = 3
+
+
+def test_connected_components_job_budget(spark, distributed_cc):
+    from hermes_spark.operators import connected_components
+
+    pairs = spark.createDataFrame(_BUDGET_EDGES, "id_a long, id_b long")
+    stats = {}
+    labels, jobs = _job_ids(
+        spark, lambda: connected_components(pairs, stats=stats)
+    )
     assert stats["rounds"] == 3
-    assert len(jobs) <= CONNECTED_COMPONENTS_JOB_BUDGET, sorted(jobs)
+    assert len(jobs) <= CONNECTED_COMPONENTS_JOB_BUDGET, jobs
     got = {(r.id, r.component) for r in labels.collect()}
-    assert got == set(_union_find_components(edges).items())
+    assert got == set(_union_find_components(_BUDGET_EDGES).items())
+
+
+def test_driver_finish_job_budget(spark):
+    from hermes_spark.operators import (
+        connected_components,
+        connected_components_star,
+    )
+
+    pairs = spark.createDataFrame(_BUDGET_EDGES, "id_a long, id_b long")
+    want = set(_union_find_components(_BUDGET_EDGES).items())
+    for cc in (connected_components, connected_components_star):
+        stats = {}
+        labels, jobs = _job_ids(spark, lambda: cc(pairs, stats=stats))
+        assert stats["rounds"] == 0 and stats["driver_finish"], cc.__name__
+        assert len(jobs) <= DRIVER_FINISH_JOB_BUDGET, (cc.__name__, jobs)
+        assert {(r.id, r.component) for r in labels.collect()} == want
+
+
+def test_min_id_roots_matches_union_find():
+    """The driver finish's numpy union-find against the reference, with
+    no Spark: seeded random graphs (isolated nodes are their own root)
+    and shuffled paths."""
+    import numpy as np
+
+    from hermes_spark.operators.dedup import _min_id_roots
+
+    rng = np.random.default_rng(301)
+    graphs = [rng.integers(0, n, (2, m)) for n, m in rng.integers(2, 80, (300, 2))]
+    graphs += [(p[:-1], p[1:]) for p in map(rng.permutation, (50, 200, 999))]
+    for src, dst in graphs:
+        n = int(max(src.max(), dst.max())) + 1
+        want = dict(enumerate(range(n)))
+        want.update(_union_find_components(zip(src.tolist(), dst.tolist())))
+        assert _min_id_roots(src, dst, n).tolist() == [want[x] for x in range(n)]
+
+
+def _shuffled_path(spark):
+    """A 200-node path whose ids are in random order: label propagation
+    needs far more than 20 rounds on it, star rounds 7."""
+    import random
+
+    ids = list(range(200))
+    random.Random(301).shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
+    return edges, spark.createDataFrame(edges, "id_a long, id_b long")
+
+
+def test_cc_raise_when_rounds_run_out(spark, distributed_cc):
+    from hermes_spark.operators import (
+        connected_components,
+        connected_components_star,
+    )
+
+    _, pairs = _shuffled_path(spark)
+    with pytest.raises(RuntimeError, match="did not converge in 20 rounds"):
+        connected_components(pairs)
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        connected_components_star(pairs, max_iter=3)
+
+
+def test_cc_driver_finish_labels_shuffled_path(spark):
+    from hermes_spark.operators import (
+        connected_components,
+        connected_components_star,
+    )
+
+    edges, pairs = _shuffled_path(spark)
+    want = set(_union_find_components(edges).items())
+    for cc in (connected_components, connected_components_star):
+        stats = {}
+        got = {(r.id, r.component) for r in cc(pairs, stats=stats).collect()}
+        assert got == want, cc.__name__
+        assert stats["driver_finish"], cc.__name__
+
+
+def test_cc_paths_return_the_same_schema(spark, monkeypatch):
+    from hermes_spark.operators import (
+        connected_components,
+        connected_components_star,
+        dedup,
+    )
+
+    for schema, edges in (
+        ("id_a long, id_b long", [(3, 1), (1, 2), (7, 7)]),
+        ("id_a string, id_b string", [("c", "a"), ("a", "b"), ("g", "g")]),
+    ):
+        pairs = spark.createDataFrame(edges, schema)
+        for cc in (connected_components, connected_components_star):
+            schemas = []
+            for limit in (dedup._DRIVER_CC_MAX_EDGES, 0):
+                monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", limit)
+                stats = {}
+                schemas.append(cc(pairs, stats=stats).schema)
+                assert stats["driver_finish"] == (limit > 0)
+            assert schemas[0] == schemas[1], (schema, cc.__name__)
+            id_type = pairs.schema["id_a"].dataType
+            assert [f.dataType for f in schemas[0]] == [id_type, id_type]
+
+
+#: Spark jobs of ``fuzzy_dedup_keep_one(algorithm="auto")`` up to its
+#: return, on a pair list that is already a checkpoint: 1 to checkpoint
+#: it again (the count is observed on that job) and the driver finish's
+#: 3.  Counting with a separate ``count()`` ran 5.
+AUTO_DEDUP_JOB_BUDGET = 4
+
+
+def test_fuzzy_dedup_auto_counts_pairs_without_a_job(spark):
+    import threading
+
+    from hermes_spark.operators import fuzzy_dedup_keep_one
+
+    df = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(12)], "doc_id long, text string"
+    )
+    edges = [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").localCheckpoint()
+    stats = {}
+    kept, jobs = _job_ids(
+        spark,
+        lambda: fuzzy_dedup_keep_one(
+            df, "doc_id", pairs, algorithm="auto", stats=stats
+        ),
+    )
+    assert len(jobs) <= AUTO_DEDUP_JOB_BUDGET, jobs
+    assert stats["edges"] == len(edges) and stats["algorithm"] == "label"
+    assert sorted(r.doc_id for r in kept.collect()) == [0, 1, 4, 5, 7, 8, 11]
+
+    # an empty pair list observes a count of 0 rather than blocking
+    results = {}
+
+    def run():
+        empty = spark.createDataFrame([], "id_a long, id_b long")
+        empty_stats = {}
+        out = fuzzy_dedup_keep_one(
+            df, "doc_id", empty, algorithm="auto", stats=empty_stats
+        )
+        results["rows"] = out.count()
+        results["stats"] = empty_stats
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "fuzzy_dedup_keep_one blocked on no pairs"
+    assert results["rows"] == 12
+    assert results["stats"]["edges"] == 0
 
 
 def test_simhash_fast_hash_variant(spark, documents):

@@ -94,7 +94,7 @@ def test_diverse_oversized_bucket_star_fallback(spark):
     assert comp.select("component").distinct().count() == 1
 
 
-def test_fuzzy_dedup_auto_algorithm_switch(spark):
+def test_fuzzy_dedup_auto_algorithm_switch(spark, distributed_cc):
     # auto mode: label propagation for small pair graphs, star above the
     # edge threshold — identical survivors either way, stats populated
     df = spark.createDataFrame(
