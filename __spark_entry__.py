@@ -1838,11 +1838,11 @@ FROM ranked WHERE rank <= {TFIDF_K}
 
 
 def q_near_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering as near_dup_components, computed with the
-    large-star/small-star algorithm (Kiveris et al. 2014) — the
-    billion-edge scale path; checked against the same oracle."""
-    from hermes_spark.operators import connected_components_star
-
+    """Same clustering as near_dup_components, checked against the same
+    oracle.  It was the large-star/small-star variant (Kiveris et al.
+    2014); ``connected_components`` is now the one clustering
+    algorithm, and the query keeps its name and oracle so the query
+    registry does not move."""
     docs = _read(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
         docs,
@@ -1852,7 +1852,7 @@ def q_near_dup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_n=SHINGLE_N,
         min_jaccard=JACCARD_MIN,
     )
-    return connected_components_star(pairs).select(
+    return connected_components(pairs).select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
     )

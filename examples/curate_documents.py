@@ -193,13 +193,10 @@ def curate(
     pairs = minhash_lsh_pairs(
         exact, "doc_id", "text", portable=False
     ).filter(F.col("est_jaccard") >= 0.8)
-    # algorithm="auto": count the (checkpointed) pair list once and
-    # switch to the O(log²n) star variant when the graph is big — label
-    # propagation for shallow candidate graphs, star for mega-corpora
+    # cc_stats: the undirected pair count and the contraction rounds
+    # run before the driver labelled the rest
     cc_stats: dict = {}
-    deduped = fuzzy_dedup_keep_one(
-        exact, "doc_id", pairs, algorithm="auto", stats=cc_stats
-    )
+    deduped = fuzzy_dedup_keep_one(exact, "doc_id", pairs, stats=cc_stats)
 
     # --- stage boundary (same rationale as above) -----------------------
     deduped = track("fuzzy_dedup", deduped.localCheckpoint())

@@ -21,9 +21,9 @@ Scale design notes (100 TB):
   so the biggest real-world dup clusters still connect instead of
   silently yielding zero pairs.
 * ``connected_components`` / ``fuzzy_dedup_keep_one`` — turn any pair
-  list into duplicate groups (a driver-side union-find while the edge
-  list fits, iterative min-label propagation beyond) and keep one
-  representative per group.
+  list into duplicate groups (contraction rounds shrink the edge list
+  until it fits the driver, whose union-find labels the rest) and keep
+  one representative per group.
 * ``ngram_jaccard_pairs`` — exact verification; intended for the
   *candidate pairs* produced by LSH (or small within-group spaces), never
   the full corpus.
@@ -665,20 +665,14 @@ def ngram_jaccard_pairs(
     )
 
 
-#: Largest edge list whose connected components the driver computes
-#: itself (the closed list of :func:`connected_components`, the
-#: shrinking star edge set of :func:`connected_components_star`): one
-#: Arrow collect and a numpy union-find instead of distributed rounds of
-#: 6 (label) or about 17 (star) Spark jobs each.  At this size, on a
-#: 4-core local[4] box, the finish (collect, union-find, ``createDataFrame``)
-#: took 1.7 s and lifted the driver's Python RSS by 120 MB, to 260 MB.
+#: Largest undirected pair list whose connected components the driver
+#: computes itself (the edge list of :func:`connected_components`,
+#: initially or after contraction rounds): one Arrow collect and a
+#: numpy union-find instead of more contraction rounds of 9-10 Spark
+#: jobs each.  At this size, on a 4-core local[4] box, the call took
+#: 3.3 s (1.8 s of it the collect, union-find and ``createDataFrame``)
+#: and lifted the driver's Python RSS by 104 MB, to 263 MB.
 _DRIVER_CC_MAX_EDGES = 1_000_000
-
-
-def _fits_on_driver(n_edges: int) -> bool:
-    # an empty graph ends in one distributed round, so a limit of 0
-    # turns the driver finish off
-    return 0 < n_edges <= _DRIVER_CC_MAX_EDGES
 
 
 def _min_id_roots(src, dst, n: int):
@@ -707,38 +701,46 @@ def _min_id_roots(src, dst, n: int):
             parent = jumped
 
 
-def _components_on_driver(edges: DataFrame, u: str, v: str) -> DataFrame:
-    """``(id, component)`` for every endpoint of ``edges`` (no nulls),
-    ``component`` the minimum id of its component: one job collects the
-    edges as Arrow, the labels come from :func:`_min_id_roots`.  Ids are
-    factorized with ``np.unique``, so index order is id order; string
-    ids sort by code point, as Spark orders them."""
+def _components_on_driver(edges: DataFrame) -> DataFrame:
+    """``(id, component)`` for every endpoint of the ``(u, v)`` edge
+    list (no nulls), ``component`` the minimum id of its component: one
+    job collects the edges as Arrow, the labels come from
+    :func:`_min_id_roots`.  Ids are factorized with ``np.unique``, so
+    index order is id order; string ids sort by code point, as Spark
+    orders them."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
-    # least/greatest give both ends one type, as the star forest does
-    ends = edges.select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
-    table = ends.toArrow()
+    table = edges.toArrow()
     ids, index = np.unique(
         np.concatenate(
-            [table.column(c).to_numpy(zero_copy_only=False) for c in ("a", "b")]
+            [table.column(c).to_numpy(zero_copy_only=False) for c in ("u", "v")]
         ),
         return_inverse=True,
     )
     roots = _min_id_roots(index[: table.num_rows], index[table.num_rows :], len(ids))
-    arrow_type = table.schema.field("a").type
+    arrow_type = table.schema.field("u").type
     labels = pa.table(
         {
             "id": pa.array(ids, arrow_type),
             "component": pa.array(ids[roots], arrow_type),
         }
     )
-    id_type = ends.schema["a"].dataType
+    id_type = edges.schema["u"].dataType
     schema = StructType(
         [StructField("id", id_type), StructField("component", id_type)]
     )
     return edges.sparkSession.createDataFrame(labels, schema)
+
+
+def _checkpoint_counted(df: DataFrame):
+    """``df`` checkpointed, and its row count observed on that job."""
+    counted = Observation()
+    df = df.observe(counted, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return df, counted.get["n"]
 
 
 def connected_components(
@@ -755,273 +757,106 @@ def connected_components(
     with a null endpoint are dropped; a self pair ``(a, a)`` keeps ``a``
     as its own component.
 
-    The edge list is built once — both directions plus one self loop
-    per node, distinct, checkpointed — and an ``Observation`` on that
-    checkpoint counts it. Up to ``_DRIVER_CC_MAX_EDGES`` (1,000,000)
-    closed edges the driver finishes: one job collects the edges as
-    Arrow and a numpy union-find labels them (:func:`_min_id_roots`).
-    Larger graphs run the distributed rounds below. ``stats`` receives
-    ``rounds`` (distributed rounds; 0 after a driver finish) and
-    ``driver_finish`` (whether the driver computed the labels).
+    The undirected edge list ``(least, greatest)`` of the pairs is built
+    once, distinct and checkpointed, and an ``Observation`` on that
+    checkpoint counts it. While it holds more than
+    ``_DRIVER_CC_MAX_EDGES`` (1,000,000) edges, a contraction round
+    shrinks it:
 
-    Distributed rounds: iterative min-label propagation with pointer
-    jumping — each round every node takes the minimum label among
-    itself, its neighbors, and its label's label (``label(label(u))``).
-    The jump step shortens label chains, so near-dup graphs converge in
-    2-4 rounds and a 200-node path with its minimum id at one end in 8.
-    Long paths with randomly ordered ids converge far slower (shuffled
-    200-node paths took 46 to over 60 rounds); when ``max_iter`` rounds
-    end with labels still moving, ``RuntimeError`` is raised rather
-    than returning labels that are not yet minimal.
+    * every node hooks to the first node of its closed neighbourhood
+      in a hashed order of the ids (one ``groupBy`` over both
+      directions of each edge), then one pointer jump takes the hook's
+      hook; the round's ``(id, label)`` map is checkpointed;
+    * both ends of each edge are relabelled through that map, loops are
+      dropped, and the distinct result is checkpointed and counted.
 
-    Round shape: each node's closed neighbourhood is its ``src`` group
-    of the edge list. Round 1 takes ``min(dst)`` over that group
-    straight from the edges; every later round is one
-    ``edges ⋈ labels`` join plus one ``groupBy(src)``, whose self-loop
-    row also carries the node's previous label. The pointer jump is a
-    second join, and the round's labels are ``localCheckpoint``-ed
-    (lineage stays one round deep). Convergence is observed on that
-    checkpoint itself — an ``Observation`` counts the labels that moved
-    — so no round runs a separate comparison job; the loop stops at the
-    first round that moves none. For billion-edge graphs
-    :func:`connected_components_star` (Kiveris et al., 2014) shuffles
-    the shrinking edge set instead of the full label table — same
-    contract.
+    A label lies in its node's component, and the component's first
+    node in that order keeps its own label while every edge at it
+    becomes a loop: components survive each round and the edge list
+    strictly shrinks. The order is hashed because in id order a path
+    numbered along its length only shifts by two nodes a round. Once
+    the list fits, one job collects it as Arrow and a numpy union-find
+    labels it (:func:`_min_id_roots`); the round maps are composed back,
+    one left join each, and a window over each component names it by
+    its minimum id. When ``max_iter`` rounds leave the list too large,
+    ``RuntimeError`` is raised. ``stats`` receives ``edges`` (the
+    undirected count) and ``rounds`` (0 when the driver labels the
+    input at once).
     """
     a, b = F.col(id_a), F.col(id_b)
-
-    def edge(u: Column, v: Column) -> Column:
-        return F.struct(u.alias("src"), v.alias("dst"))
-
-    # one pass over the pairs emits both directions and both self loops
-    counted = Observation()
-    edges = (
+    edges, n_edges = _checkpoint_counted(
         pairs.filter(a.isNotNull() & b.isNotNull())
-        .select(F.inline(F.array(edge(a, b), edge(b, a), edge(a, a), edge(b, b))))
+        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .distinct()
-        .observe(counted, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    if _fits_on_driver(counted.get["n"]):
-        if stats is not None:
-            stats.update(rounds=0, driver_finish=True)
-        # one direction and the self loops still name every node
-        return _components_on_driver(
-            edges.filter(F.col("src") <= F.col("dst")), "src", "dst"
-        )
-
-    # The pointer jump joins each round's aggregate with itself; Spark
-    # reuses the aggregate's shuffles for the second copy only when both
-    # copies plan identically.  The jump's join key makes the optimizer
-    # add ``src IS NOT NULL`` to one copy, so both get it up front (the
-    # edges hold no nulls), and both joins are pinned to sort-merge: an
-    # adaptive broadcast, decided per copy at run time, splits them too.
-    closed = edges.filter(F.col("src").isNotNull())
-    labels, rounds, changed = None, 0, 1
-    while changed:
-        if rounds == max_iter:
+    if stats is not None:
+        stats["edges"] = n_edges
+    u, v, cu, cv = F.col("u"), F.col("v"), F.col("cu"), F.col("cv")
+    n, h = F.col("n"), F.col("h")
+    maps = []
+    while n_edges > _DRIVER_CC_MAX_EDGES:
+        if len(maps) == max_iter:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                f"rounds: the last round still moved {changed} labels; use "
-                "connected_components_star or a larger max_iter"
+                f"connected_components did not finish in {max_iter} rounds: "
+                f"{n_edges} edges remain; use a larger max_iter"
             )
-        rounds += 1
-        if labels is None:
-            # every label is still the node's own id
-            propagated = (
-                closed.groupBy("src")
-                .agg(F.min("dst").alias("component"))
-                .withColumn("old", F.col("src"))
-            )
-        else:
-            propagated = (
-                closed.hint("merge")
-                .join(
-                    labels.select(
-                        F.col("id").alias("dst"), F.col("component").alias("nc")
-                    ),
-                    on="dst",
-                )
-                .groupBy("src")
-                .agg(
-                    F.min("nc").alias("component"),
-                    # the self loop's row holds the node's current label
-                    F.min(
-                        F.when(F.col("src") == F.col("dst"), F.col("nc"))
-                    ).alias("old"),
+        # min_by keeps the hash aggregate (a struct minimum would sort);
+        # a hash tie between ids only changes which member a node hooks to
+        hooks = (
+            edges.select(
+                F.inline(
+                    F.array(
+                        F.struct(u.alias("id"), v.alias("n")),
+                        F.struct(v.alias("id"), u.alias("n")),
+                    )
                 )
             )
-        propagated = propagated.withColumnRenamed("src", "id")
-        # pointer jumping: label(u) <- label(label(u)) halves chain depth
-        parents = propagated.select(
-            F.col("id").alias("component"), F.col("component").alias("cc")
-        )
-        jumped = (
-            propagated.hint("merge")
-            .join(parents, on="component", how="left")
+            .groupBy("id")
+            .agg(
+                F.min_by(n, F.xxhash64(n)).alias("n"),
+                F.min(F.xxhash64(n)).alias("h"),
+            )
             .select(
                 "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("cc"), F.col("component")),
-                ).alias("component"),
-                "old",
+                F.when(h < F.xxhash64("id"), n).otherwise(F.col("id")).alias("m"),
             )
         )
-        moved = Observation()
-        labels = (
-            jumped.observe(
-                moved,
-                F.sum(
-                    (F.col("component") != F.col("old")).cast("long")
-                ).alias("changed"),
-            )
+        label = (
+            hooks.join(hooks.toDF("m", "component"), on="m")
             .select("id", "component")
             .localCheckpoint(eager=True)
         )
-        # an empty graph observes a null sum: nothing moved
-        changed = moved.get["changed"]
-    if stats is not None:
-        stats.update(rounds=rounds, driver_finish=False)
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    stats: Optional[dict] = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014). Same contract as :func:`connected_components`:
-    ``(id, component)`` with ``component`` = min reachable id.
-
-    Why a second algorithm: min-label propagation needs O(diameter)
-    rounds — fine for shallow near-dup clusters, quadratic-ish pain on
-    long chains (transitive similarity at loose thresholds). Star rounds
-    contract paths aggressively and converge in O(log^2 n) rounds on any
-    topology, so this is the billion-edge scale path. Each round is two
-    self-joins on the (shrinking) edge set; lineage is truncated with
-    ``localCheckpoint`` and the fixed point is detected with a (count,
-    hash-sum) signature instead of a full set comparison — observed on
-    the round's checkpoint itself, so it costs no job of its own.
-    ``max_iter`` rounds without a repeated signature raise
-    ``RuntimeError``.
-
-    The initial edge list and each round's edge set are counted the
-    same way; as soon as a count is at most ``_DRIVER_CC_MAX_EDGES``
-    (1,000,000) the driver labels that edge set itself, as in
-    :func:`connected_components`. ``stats`` receives ``rounds``
-    (distributed rounds; 0 when the initial list fits),
-    ``final_edges`` (the edge count the rounds stopped at) and
-    ``driver_finish``. Unlike :func:`connected_components`, a node seen
-    only in self pairs ``(a, a)`` gets no row.
-
-    * large-star: every node links its LARGER neighbors to the minimum
-      of its neighborhood (incl. itself) — strictly decreases large
-      endpoints without creating new minima.
-    * small-star: every node links its smaller-or-equal neighbors to
-      that minimum — flattens chains into stars.
-    """
-    counted = Observation()
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(counted, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_edges = counted.get["n"]
-
-    def neighborhood_min(sym: DataFrame) -> DataFrame:
-        # m(u) = min over N(u) + {u}
-        return (
-            sym.unionByName(sym.select(F.col("u"), F.col("u").alias("v")))
-            .groupBy("u")
-            .agg(F.min("v").alias("m"))
-        )
-
-    def symmetrize(e: DataFrame) -> DataFrame:
-        return e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-
-    def signature(e: DataFrame, obs: Observation) -> DataFrame:
-        return e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: ANSI mode would raise on long overflow
-            F.coalesce(
-                F.sum(
-                    F.xxhash64(F.col("u"), F.col("v")).cast("decimal(38,0)")
-                ),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        )
-
-    prev_sig, rounds = None, 0
-    driver_finish = _fits_on_driver(n_edges)
-    while not driver_finish:
-        if rounds == max_iter:
-            raise RuntimeError(
-                f"connected_components_star did not converge in {max_iter} "
-                f"rounds: the last round still changed its edge set "
-                f"({n_edges} edges); use a larger max_iter"
-            )
-        rounds += 1
-        sym = symmetrize(edges)
-        # large-star: (v, m(u)) for v in N(u), v > u
-        ls = (
-            sym.join(neighborhood_min(sym), on="u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
+        maps.append(label)
+        edges, n_edges = _checkpoint_counted(
+            edges.join(label.toDF("u", "cu"), on="u")
+            .join(label.toDF("v", "cv"), on="v")
+            .filter(cu != cv)
+            .select(F.least(cu, cv).alias("u"), F.greatest(cu, cv).alias("v"))
             .distinct()
         )
-        sym2 = symmetrize(ls)
-        # small-star: (v, m(u)) for v in N(u) + {u}, v <= u — the {u}
-        # member is what links u itself to its neighborhood minimum
-        sym2_self = sym2.unionByName(
-            sym2.select("u").distinct().select(
-                F.col("u"), F.col("u").alias("v")
-            )
-        )
-        observed = Observation()
-        edges = signature(
-            sym2_self.join(neighborhood_min(sym2), on="u")
-            .filter(F.col("v") <= F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            observed,
-        ).localCheckpoint(eager=True)
-        sig = tuple(observed.get[k] for k in ("n", "h"))
-        n_edges = sig[0]
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-        driver_finish = _fits_on_driver(n_edges)
+    rounds = len(maps)
     if stats is not None:
-        stats.update(
-            rounds=rounds, final_edges=n_edges, driver_finish=driver_finish
-        )
-    if driver_finish:
-        return _components_on_driver(edges, "u", "v")
+        stats["rounds"] = rounds
+    if n_edges:
+        labels = _components_on_driver(edges)
+    elif maps:
+        # the last round left no edge: its labels name whole components
+        labels = maps.pop()
+    else:
+        labels = edges.toDF("id", "component")
+    for label in reversed(maps):
+        labels = label.join(
+            labels.toDF("component", "root"), on="component", how="left"
+        ).select("id", F.coalesce("root", "component").alias("component"))
+    if rounds:
+        # a round's label is a member of the component, not its minimum
+        from pyspark.sql.window import Window
 
-    # Fixed point is a forest of stars: every edge is (node, root).
-    members = edges.select(
-        F.greatest("u", "v").alias("id"), F.least("u", "v").alias("component")
-    )
-    roots = edges.select(
-        F.least("u", "v").alias("id"), F.least("u", "v").alias("component")
-    )
-    return (
-        members.unionByName(roots)
-        .groupBy("id")
-        .agg(F.min("component").alias("component"))
-    )
+        by_component = Window.partitionBy("component")
+        labels = labels.select(
+            "id", F.min("id").over(by_component).alias("component")
+        )
+    return labels
 
 
 def fuzzy_dedup_keep_one(
@@ -1030,8 +865,6 @@ def fuzzy_dedup_keep_one(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    algorithm: str = "label",
-    star_edge_threshold: int = 2_000_000,
     stats: Optional[dict] = None,
     keep_by: Optional[Column] = None,
 ) -> DataFrame:
@@ -1046,32 +879,10 @@ def fuzzy_dedup_keep_one(
     (dup-involved ids), never the full corpus: one id-keyed join to
     fetch the scores plus one component-keyed window.
 
-    ``algorithm``: ``"label"`` (min-label propagation — shallow near-dup
-    clusters), ``"star"`` (large/small-star, the O(log²n) big-graph
-    path), or ``"auto"`` — checkpoint the pair list once (so the
-    clustering pass reuses it rather than recomputing the pair
-    pipeline), count it with an ``Observation`` on that checkpoint (no
-    job of its own) and pick star above ``star_edge_threshold`` edges.
-    Either algorithm finishes on the driver when its edge list is at
-    most ``_DRIVER_CC_MAX_EDGES`` (1,000,000) rows, and raises
-    ``RuntimeError`` if it does not converge in its rounds. ``stats``
-    receives the chosen algorithm's keys (``rounds``,
-    ``driver_finish``, and ``final_edges`` for star), plus ``edges`` and
-    ``algorithm`` under ``"auto"``."""
-    if algorithm not in ("label", "star", "auto"):
-        raise ValueError(f"algorithm must be label/star/auto, got {algorithm!r}")
-    if algorithm == "auto":
-        counted = Observation()
-        pairs = pairs.observe(
-            counted, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        n_edges = counted.get["n"]
-        algorithm = "star" if n_edges > star_edge_threshold else "label"
-        if stats is not None:
-            stats["edges"] = n_edges
-            stats["algorithm"] = algorithm
-    cc = connected_components_star if algorithm == "star" else connected_components
-    components = cc(pairs, id_a, id_b, stats=stats)
+    The components come from :func:`connected_components`, which
+    raises ``RuntimeError`` if its rounds run out; ``stats`` receives
+    its ``edges`` and ``rounds``."""
+    components = connected_components(pairs, id_a, id_b, stats=stats)
     if keep_by is None:
         losers = components.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)

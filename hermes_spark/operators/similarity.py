@@ -511,11 +511,11 @@ def semantic_dedup(
 
     Composition of scale-proven pieces: hyperplane-LSH near-dup pairs
     (bucketed — no all-pairs join at scale; ``exact=True`` for the
-    quadratic verification variant), min-label connected components
-    (pointer jumping, O(log d) rounds), anti-join of the losers.  The
-    corpus-wide data moves through one LSH bucket shuffle plus the
-    narrow (id, id) component iterations — embeddings themselves never
-    re-shuffle after bucketing.
+    quadratic verification variant), connected components (labelled on
+    the driver once the pair list fits, after contraction rounds that
+    shrink it), anti-join of the losers.  The corpus-wide data moves
+    through one LSH bucket shuffle plus the narrow (id, id) component
+    rounds — embeddings themselves never re-shuffle after bucketing.
     """
     from .dedup import fuzzy_dedup_keep_one
 

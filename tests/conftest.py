@@ -48,8 +48,17 @@ def embeddings(spark, sf_dir):
 
 @pytest.fixture
 def distributed_cc(monkeypatch):
-    """Connected components without the driver finish: every graph runs
-    the distributed rounds."""
+    """Connected components without the driver finish: every graph is
+    contracted until no edge is left."""
     from hermes_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)
+
+
+@pytest.fixture
+def contracted_cc(monkeypatch):
+    """A driver limit of 20 edges: larger graphs run contraction rounds,
+    then the driver labels what is left."""
+    from hermes_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 20)

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hermes_spark.operators import (
+    connected_components,
     duplicate_clusters,
     exact_dedup,
     minhash_lsh_pairs,
@@ -121,8 +122,6 @@ def test_ngram_jaccard_runs_shingle_kernel_once(spark, monkeypatch):
 
 
 def test_connected_components_basic(spark):
-    from hermes_spark.operators import connected_components
-
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 3)], ["id_a", "id_b"]
     )
@@ -133,14 +132,17 @@ def test_connected_components_basic(spark):
 
 
 def test_connected_components_chain_converges(spark, distributed_cc):
-    """A long path graph needs diameter rounds — pins the iteration loop."""
-    from hermes_spark.operators import connected_components
-
+    """A 64-node path numbered along its length contracts to one
+    component in a few rounds: they hook in hashed order, where id order
+    would only shift the path by two nodes a round."""
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
+        [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
     )
-    got = {(r.id, r.component) for r in connected_components(pairs).collect()}
-    assert got == {(i, 0) for i in range(13)}
+    got = {
+        (r.id, r.component)
+        for r in connected_components(pairs, max_iter=8).collect()
+    }
+    assert got == {(i, 0) for i in range(64)}
 
 
 def test_fuzzy_dedup_keep_one(spark, documents):
@@ -223,57 +225,6 @@ def test_mix_corpora(spark, documents):
     }
 
 
-def test_star_components_match_label_propagation(spark):
-    """large-star/small-star must agree with min-label propagation on a
-    basic graph, a long chain, and a seeded random graph."""
-    import random
-
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
-
-    cases = [
-        [(1, 2), (2, 3), (5, 6), (9, 3)],
-        [(i, i + 1) for i in range(40)],  # path graph: worst diameter
-    ]
-    rng = random.Random(42)
-    cases.append(
-        list({(rng.randrange(60), rng.randrange(60)) for _ in range(80)})
-    )
-    for edges in cases:
-        pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-        lp = {
-            (r.id, r.component)
-            for r in connected_components(pairs).collect()
-        }
-        star = {
-            (r.id, r.component)
-            for r in connected_components_star(pairs).collect()
-        }
-        # star drops nodes only ever seen in self-loops (a,a); label
-        # propagation keeps them — align before comparing
-        self_only = {a for a, b in edges if a == b}
-        linked = {x for a, b in edges if a != b for x in (a, b)}
-        lp = {(i, c) for i, c in lp if i in linked or i not in self_only}
-        assert star == lp, edges
-
-
-def test_star_components_converges_fast_on_chain(spark, distributed_cc):
-    """O(log^2 n) rounds: a 64-node path must finish well under the
-    diameter-many rounds label propagation would need."""
-    from hermes_spark.operators import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
-    )
-    got = {
-        (r.id, r.component)
-        for r in connected_components_star(pairs, max_iter=8).collect()
-    }
-    assert got == {(i, 0) for i in range(64)}
-
-
 def test_blocking_key_pairs(spark):
     from hermes_spark.operators import blocking_key_pairs
 
@@ -325,35 +276,28 @@ def _union_find_components(edges):
 
 
 def _cc_expected(edges):
-    """Union-find reference for both algorithms: pairs with a null
-    endpoint are dropped; the star variant also drops nodes seen only in
-    self pairs ``(a, a)``."""
+    """Union-find reference: pairs with a null endpoint are dropped."""
     kept = [(a, b) for a, b in edges if a is not None and b is not None]
-    label = set(_union_find_components(kept).items())
-    linked = {x for a, b in kept if a != b for x in (a, b)}
-    return label, {(n, c) for n, c in label if n in linked}
+    return set(_union_find_components(kept).items())
+
+
+def _cc_labels(pairs, **kwargs):
+    return {
+        (r.id, r.component)
+        for r in connected_components(pairs, **kwargs).collect()
+    }
 
 
 def _assert_cc_match_union_find(spark, edges):
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
-
     pairs = spark.createDataFrame(edges, "id_a int, id_b int")
-    label_expected, star_expected = _cc_expected(edges)
-    lp = {(r.id, r.component) for r in connected_components(pairs).collect()}
-    assert lp == label_expected
-    star = {
-        (r.id, r.component)
-        for r in connected_components_star(pairs).collect()
-    }
-    assert star == star_expected
+    assert _cc_labels(pairs) == _cc_expected(edges)
 
 
-# The clustering tests below run twice: on the default path (graphs this
-# small finish on the driver) and, under ``distributed_cc``, on the
-# distributed rounds.
+# The clustering tests below run at three driver limits: the default
+# (graphs this small are labelled on the driver at once), a limit of 20
+# edges (``contracted_cc``: contraction rounds, then the driver finish,
+# then composition) and 0 (``distributed_cc``: contraction until no edge
+# is left).
 _cc_settings = settings(
     max_examples=6,
     deadline=None,
@@ -369,22 +313,25 @@ def test_cc_algorithms_match_union_find(spark, edges):
 
 @_cc_settings
 @given(edges=_edges_strategy)
+def test_cc_contraction_then_driver_finish_match_union_find(
+    spark, contracted_cc, edges
+):
+    _assert_cc_match_union_find(spark, edges)
+
+
+@_cc_settings
+@given(edges=_edges_strategy)
 def test_cc_distributed_rounds_match_union_find(spark, distributed_cc, edges):
     _assert_cc_match_union_find(spark, edges)
 
 
 def test_cc_algorithms_match_union_find_on_planted_shapes(spark):
-    """Both clustering algorithms against the union-find reference on
-    seeded random graphs, a 200-node chain (the minimum id at one end),
-    a star, duplicate/reversed/self pairs, and string ids with null
-    endpoints (empty pair lists: the hypothesis test above and the
-    no-blocking test below)."""
+    """Connected components against the union-find reference on seeded
+    random graphs, a 200-node chain (the minimum id at one end), a star,
+    duplicate/reversed/self pairs, and string ids with null endpoints
+    (empty pair lists: the hypothesis tests above and the no-blocking
+    test below)."""
     import random
-
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
 
     rng = random.Random(301)
     random_graphs = [
@@ -408,17 +355,13 @@ def test_cc_algorithms_match_union_find_on_planted_shapes(spark):
     ]
     for edges, schema in cases:
         pairs = spark.createDataFrame(edges, schema)
-        want_label, want_star = _cc_expected(edges)
-        label = {
-            (r.id, r.component)
-            for r in connected_components(pairs).collect()
-        }
-        assert label == want_label, schema
-        star_rows = {
-            (r.id, r.component)
-            for r in connected_components_star(pairs).collect()
-        }
-        assert star_rows == want_star, schema
+        assert _cc_labels(pairs) == _cc_expected(edges), schema
+
+
+def test_cc_contraction_then_driver_finish_match_union_find_on_planted_shapes(
+    spark, contracted_cc
+):
+    test_cc_algorithms_match_union_find_on_planted_shapes(spark)
 
 
 def test_cc_distributed_rounds_match_union_find_on_planted_shapes(
@@ -428,40 +371,38 @@ def test_cc_distributed_rounds_match_union_find_on_planted_shapes(
 
 
 def test_cc_empty_pairs_return_without_blocking(spark):
-    """The edge count and convergence are read from ``Observation``s on
-    checkpoints; on an empty graph (no pairs, or only null endpoints)
-    those observations must still complete, so both algorithms return an
-    empty frame (label propagation after one round) instead of waiting
-    forever.  An empty graph never takes the driver finish, so this one
-    test covers the distributed path too."""
+    """The edge count is read from an ``Observation`` on a checkpoint;
+    on an empty graph (no pairs, or only null endpoints) that
+    observation must still complete, so connected components and fuzzy
+    dedup return instead of waiting forever.  No round runs on an empty
+    graph, whatever the driver limit."""
     import threading
 
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
+    from hermes_spark.operators import fuzzy_dedup_keep_one
 
+    df = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(12)], "doc_id long, text string"
+    )
     results = {}
 
     def run():
         for name, rows in (("empty", []), ("nulls", [(None, 1), (2, None)])):
             pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-            label_stats, star_stats = {}, {}
+            stats, dedup_stats = {}, {}
             results[name] = (
-                connected_components(pairs, stats=label_stats).collect(),
-                label_stats,
-                connected_components_star(pairs, stats=star_stats).collect(),
-                star_stats["final_edges"],
+                connected_components(pairs, stats=stats).collect(),
+                stats,
+                fuzzy_dedup_keep_one(df, "doc_id", pairs, stats=dedup_stats).count(),
+                dedup_stats,
             )
 
     worker = threading.Thread(target=run, daemon=True)
     worker.start()
     worker.join(timeout=300)
     assert not worker.is_alive(), "connected components blocked on an empty graph"
+    no_edges = {"edges": 0, "rounds": 0}
     for name in ("empty", "nulls"):
-        assert results[name] == (
-            [], {"rounds": 1, "driver_finish": False}, [], 0
-        ), name
+        assert results[name] == ([], no_edges, 12, no_edges), name
 
 
 def _job_ids(spark, action):
@@ -479,54 +420,49 @@ def _job_ids(spark, action):
     return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
-#: 40 disjoint 5-node paths with interleaved ids: 3 distributed rounds
+#: 40 disjoint 5-node paths with interleaved ids: 2 contraction rounds
+#: at a driver limit of 0
 _BUDGET_EDGES = [
     (c + 100 * i, c + 100 * (i + 1)) for c in range(40) for i in range(4)
 ]
 
-#: Spark jobs of ``connected_components``' distributed rounds on the
-#: 3-round graph above, in this suite's session (AQE on, 8 shuffle
-#: partitions): 2 to build and checkpoint the edges, 3 for round 1 (its
-#: aggregate, the pointer jump and the checkpoint) and 6 for each later
-#: round (the edge and label shuffles of the neighbour-min join, its
-#: aggregate, the second copy of that aggregate in the pointer jump, the
-#: jump's shuffle and the checkpoint).  Convergence costs no job of its
-#: own.
-CONNECTED_COMPONENTS_JOB_BUDGET = 17
+#: Spark jobs of ``connected_components``' contraction rounds on the
+#: 2-round graph above, at a driver limit of 0, in this suite's session
+#: (AQE on, 8 shuffle partitions): 2 to build, count and checkpoint the
+#: edges, then 9 or 10 a round — 4 for the round's map (the hook
+#: aggregate's shuffles, the pointer jump's self-join, the checkpoint)
+#: and 5 or 6 for the relabelled edges (the shuffles of the two joins
+#: and the distinct, the checkpoint; the last round's empty result
+#: skips one in some runs).  Measured 20 and 21.  Composing
+#: the round maps and naming each component by its minimum id run no
+#: job until the labels are read.
+CONNECTED_COMPONENTS_JOB_BUDGET = 21
 
-#: Spark jobs of either algorithm's driver finish on the same graph: 2
-#: to build, count and checkpoint the edges, 1 to collect them as Arrow.
+#: Spark jobs when the driver labels the same graph at once: 2 to
+#: build, count and checkpoint the edges, 1 to collect them as Arrow.
 DRIVER_FINISH_JOB_BUDGET = 3
 
 
 def test_connected_components_job_budget(spark, distributed_cc):
-    from hermes_spark.operators import connected_components
-
     pairs = spark.createDataFrame(_BUDGET_EDGES, "id_a long, id_b long")
     stats = {}
     labels, jobs = _job_ids(
         spark, lambda: connected_components(pairs, stats=stats)
     )
-    assert stats["rounds"] == 3
+    assert stats == {"edges": len(_BUDGET_EDGES), "rounds": 2}
     assert len(jobs) <= CONNECTED_COMPONENTS_JOB_BUDGET, jobs
     got = {(r.id, r.component) for r in labels.collect()}
     assert got == set(_union_find_components(_BUDGET_EDGES).items())
 
 
 def test_driver_finish_job_budget(spark):
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
-
     pairs = spark.createDataFrame(_BUDGET_EDGES, "id_a long, id_b long")
-    want = set(_union_find_components(_BUDGET_EDGES).items())
-    for cc in (connected_components, connected_components_star):
-        stats = {}
-        labels, jobs = _job_ids(spark, lambda: cc(pairs, stats=stats))
-        assert stats["rounds"] == 0 and stats["driver_finish"], cc.__name__
-        assert len(jobs) <= DRIVER_FINISH_JOB_BUDGET, (cc.__name__, jobs)
-        assert {(r.id, r.component) for r in labels.collect()} == want
+    stats = {}
+    labels, jobs = _job_ids(spark, lambda: connected_components(pairs, stats=stats))
+    assert stats == {"edges": len(_BUDGET_EDGES), "rounds": 0}
+    assert len(jobs) <= DRIVER_FINISH_JOB_BUDGET, jobs
+    got = {(r.id, r.component) for r in labels.collect()}
+    assert got == set(_union_find_components(_BUDGET_EDGES).items())
 
 
 def test_min_id_roots_matches_union_find():
@@ -548,8 +484,8 @@ def test_min_id_roots_matches_union_find():
 
 
 def _shuffled_path(spark):
-    """A 200-node path whose ids are in random order: label propagation
-    needs far more than 20 rounds on it, star rounds 7."""
+    """A 200-node path whose ids are in random order: min-label
+    propagation needed far more than 20 rounds on it."""
     import random
 
     ids = list(range(200))
@@ -558,68 +494,64 @@ def _shuffled_path(spark):
     return edges, spark.createDataFrame(edges, "id_a long, id_b long")
 
 
-def test_cc_raise_when_rounds_run_out(spark, distributed_cc):
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
+def test_cc_contraction_labels_long_paths_and_random_graphs(
+    spark, distributed_cc
+):
+    """At a driver limit of 0, the shuffled path and a random graph past
+    percolation (1,500 pairs on 2,000 ids, one giant component) are
+    contracted to nothing within the default ``max_iter``."""
+    import random
 
+    rng = random.Random(301)
+    random_graph = [(rng.randrange(2000), rng.randrange(2000)) for _ in range(1500)]
+    for edges in (_shuffled_path(spark)[0], random_graph):
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        stats = {}
+        assert _cc_labels(pairs, stats=stats) == _cc_expected(edges)
+        assert 0 < stats["rounds"] <= 10, stats
+
+
+def test_cc_raise_when_rounds_run_out(spark, distributed_cc):
     _, pairs = _shuffled_path(spark)
-    with pytest.raises(RuntimeError, match="did not converge in 20 rounds"):
-        connected_components(pairs)
-    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
-        connected_components_star(pairs, max_iter=3)
+    with pytest.raises(
+        RuntimeError, match=r"did not finish in 1 rounds: [1-9]\d* edges remain"
+    ):
+        connected_components(pairs, max_iter=1)
 
 
 def test_cc_driver_finish_labels_shuffled_path(spark):
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-    )
-
     edges, pairs = _shuffled_path(spark)
-    want = set(_union_find_components(edges).items())
-    for cc in (connected_components, connected_components_star):
-        stats = {}
-        got = {(r.id, r.component) for r in cc(pairs, stats=stats).collect()}
-        assert got == want, cc.__name__
-        assert stats["driver_finish"], cc.__name__
+    stats = {}
+    assert _cc_labels(pairs, stats=stats) == _cc_expected(edges)
+    assert stats["rounds"] == 0
 
 
 def test_cc_paths_return_the_same_schema(spark, monkeypatch):
-    from hermes_spark.operators import (
-        connected_components,
-        connected_components_star,
-        dedup,
-    )
+    from hermes_spark.operators import dedup
 
     for schema, edges in (
         ("id_a long, id_b long", [(3, 1), (1, 2), (7, 7)]),
         ("id_a string, id_b string", [("c", "a"), ("a", "b"), ("g", "g")]),
     ):
         pairs = spark.createDataFrame(edges, schema)
-        for cc in (connected_components, connected_components_star):
-            schemas = []
-            for limit in (dedup._DRIVER_CC_MAX_EDGES, 0):
-                monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", limit)
-                stats = {}
-                schemas.append(cc(pairs, stats=stats).schema)
-                assert stats["driver_finish"] == (limit > 0)
-            assert schemas[0] == schemas[1], (schema, cc.__name__)
-            id_type = pairs.schema["id_a"].dataType
-            assert [f.dataType for f in schemas[0]] == [id_type, id_type]
+        schemas = []
+        for limit in (dedup._DRIVER_CC_MAX_EDGES, 1, 0):
+            monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", limit)
+            stats = {}
+            schemas.append(dedup.connected_components(pairs, stats=stats).schema)
+            assert (stats["rounds"] > 0) == (limit < len(edges)), limit
+        assert schemas[0] == schemas[1] == schemas[2], schema
+        id_type = pairs.schema["id_a"].dataType
+        assert [f.dataType for f in schemas[0]] == [id_type, id_type]
 
 
-#: Spark jobs of ``fuzzy_dedup_keep_one(algorithm="auto")`` up to its
-#: return, on a pair list that is already a checkpoint: 1 to checkpoint
-#: it again (the count is observed on that job) and the driver finish's
-#: 3.  Counting with a separate ``count()`` ran 5.
-AUTO_DEDUP_JOB_BUDGET = 4
+#: Spark jobs of ``fuzzy_dedup_keep_one`` up to its return, when the
+#: driver labels the pairs at once: the driver finish's 3.  The
+#: anti-join that drops the losers runs when the result is read.
+FUZZY_DEDUP_JOB_BUDGET = 3
 
 
-def test_fuzzy_dedup_auto_counts_pairs_without_a_job(spark):
-    import threading
-
+def test_fuzzy_dedup_keep_one_job_budget(spark):
     from hermes_spark.operators import fuzzy_dedup_keep_one
 
     df = spark.createDataFrame(
@@ -630,32 +562,11 @@ def test_fuzzy_dedup_auto_counts_pairs_without_a_job(spark):
     stats = {}
     kept, jobs = _job_ids(
         spark,
-        lambda: fuzzy_dedup_keep_one(
-            df, "doc_id", pairs, algorithm="auto", stats=stats
-        ),
+        lambda: fuzzy_dedup_keep_one(df, "doc_id", pairs, stats=stats),
     )
-    assert len(jobs) <= AUTO_DEDUP_JOB_BUDGET, jobs
-    assert stats["edges"] == len(edges) and stats["algorithm"] == "label"
+    assert len(jobs) <= FUZZY_DEDUP_JOB_BUDGET, jobs
+    assert stats == {"edges": len(edges), "rounds": 0}
     assert sorted(r.doc_id for r in kept.collect()) == [0, 1, 4, 5, 7, 8, 11]
-
-    # an empty pair list observes a count of 0 rather than blocking
-    results = {}
-
-    def run():
-        empty = spark.createDataFrame([], "id_a long, id_b long")
-        empty_stats = {}
-        out = fuzzy_dedup_keep_one(
-            df, "doc_id", empty, algorithm="auto", stats=empty_stats
-        )
-        results["rows"] = out.count()
-        results["stats"] = empty_stats
-
-    worker = threading.Thread(target=run, daemon=True)
-    worker.start()
-    worker.join(timeout=300)
-    assert not worker.is_alive(), "fuzzy_dedup_keep_one blocked on no pairs"
-    assert results["rows"] == 12
-    assert results["stats"]["edges"] == 0
 
 
 def test_simhash_fast_hash_variant(spark, documents):

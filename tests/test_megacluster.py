@@ -94,27 +94,26 @@ def test_diverse_oversized_bucket_star_fallback(spark):
     assert comp.select("component").distinct().count() == 1
 
 
-def test_fuzzy_dedup_auto_algorithm_switch(spark, distributed_cc):
-    # auto mode: label propagation for small pair graphs, star above the
-    # edge threshold — identical survivors either way, stats populated
+def test_fuzzy_dedup_same_survivors_at_every_driver_limit(spark, monkeypatch):
+    # one clustering call: labelled on the driver at once, or contracted
+    # until no edge is left — identical survivors, stats populated
+    from hermes_spark.operators import dedup
+
     df = spark.createDataFrame(
         [(i, f"{BASE} tail{i % 3}") for i in range(30)],
         "doc_id int, text string",
     )
     pairs = minhash_lsh_pairs(df, "doc_id", "text", min_jaccard=0.5)
-    s1: dict = {}
-    small = fuzzy_dedup_keep_one(
-        df, "doc_id", pairs, algorithm="auto", stats=s1
-    )
-    assert s1["algorithm"] == "label" and s1["rounds"] >= 1 and s1["edges"] > 0
-    s2: dict = {}
-    forced = fuzzy_dedup_keep_one(
-        df, "doc_id", pairs, algorithm="auto", star_edge_threshold=0, stats=s2
-    )
-    assert s2["algorithm"] == "star" and "final_edges" in s2
-    assert sorted(r.doc_id for r in small.collect()) == sorted(
-        r.doc_id for r in forced.collect()
-    )
+    survivors, stats = [], []
+    for limit in (dedup._DRIVER_CC_MAX_EDGES, 0):
+        monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", limit)
+        s: dict = {}
+        kept = fuzzy_dedup_keep_one(df, "doc_id", pairs, stats=s)
+        survivors.append(sorted(r.doc_id for r in kept.collect()))
+        stats.append(s)
+    assert stats[0]["rounds"] == 0 and stats[1]["rounds"] >= 1
+    assert stats[0]["edges"] == stats[1]["edges"] > 0
+    assert survivors[0] == survivors[1]
 
 
 def test_dedup_against_mega_history_cluster_still_matches(spark):

@@ -144,8 +144,7 @@ def probe_stages(spark) -> None:
     t0 = time.time()
     pairs_m = spark.read.parquet(f"{work}/pairs")
     kept = fuzzy_dedup_keep_one(
-        docs, "doc_id", pairs_m, algorithm="auto",
-        keep_by=F.length("text"),
+        docs, "doc_id", pairs_m, keep_by=F.length("text")
     )
     kept.write.mode("overwrite").parquet(f"{work}/kept")
     n_kept = spark.read.parquet(f"{work}/kept").count()
@@ -155,7 +154,7 @@ def probe_stages(spark) -> None:
 
 def probe_replica(spark) -> None:
     """The funnel's minhash stage VERBATIM (live pairs plan into
-    fuzzy auto + write) — isolates composition cost from operator cost."""
+    fuzzy dedup + write) — isolates composition cost from operator cost."""
     from pyspark.sql import functions as F
 
     from hermes_spark.operators import fuzzy_dedup_keep_one, minhash_lsh_pairs
@@ -169,7 +168,7 @@ def probe_replica(spark) -> None:
         num_bands=4, min_jaccard=0.7, portable=False,
     )
     neared = fuzzy_dedup_keep_one(
-        docs, "doc_id", pairs, algorithm="auto", keep_by=F.length("text")
+        docs, "doc_id", pairs, keep_by=F.length("text")
     )
     neared.write.mode("overwrite").parquet(f"{work}/neardedup")
     n_kept = spark.read.parquet(f"{work}/neardedup").count()
